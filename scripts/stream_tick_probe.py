@@ -6,8 +6,10 @@ turning "the streaming twin inherits the batch-kernel win" into a
 recorded number.
 
 One JSON line per pipeline to stdout:
-  {"pipeline": ..., "setup_s": ..., "drain_s": ...,
+  {"pipeline": ..., "setup_s": ..., "drain_s": ..., "timed_out": false,
    "ticks": [{"rows": N, "ms": D}, ...]}
+A pipeline that has not drained after 600 s is stopped and reported
+with "timed_out": true; its ticks are the ones it finished.
 
 --repo lets the same script run against an older checkout (a plain
 `git worktree add` of the pre-change commit) for an honest A/B with
@@ -186,7 +188,10 @@ def main() -> None:
             t0 = time.monotonic()
             q = PIPELINES[name](tmp)
             t1 = time.monotonic()
-            q.awaitTermination(timeout=600)
+            # a query still running must stop before its directories go
+            timed_out = not q.awaitTermination(timeout=600)
+            if timed_out:
+                q.stop()
             t2 = time.monotonic()
             ticks = [
                 {"rows": p["numInputRows"], "ms": p["batchDuration"]}
@@ -199,6 +204,7 @@ def main() -> None:
                         "repo": REPO,
                         "setup_s": round(t1 - t0, 2),
                         "drain_s": round(t2 - t1, 2),
+                        "timed_out": timed_out,
                         "ticks": ticks,
                     }
                 ),

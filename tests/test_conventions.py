@@ -189,3 +189,30 @@ def test_operator_index_matches_registry():
 
     rows = re.findall(r"^\| `([a-z0-9_]+)` \|", open("docs/OPERATORS.md").read(), re.M)
     assert sorted(rows) == sorted(QUERIES)
+
+
+def test_streaming_state_goes_through_the_versioned_helpers():
+    """Outside the versioned-state helpers, no pipeline starts its own
+    query, reads batch N-1 by path, or writes a single-writer table: the
+    replay contract lives in one place (``_commit``) and cannot drift
+    per pipeline. Whitespace is ignored so a wrapped call still counts."""
+    import ast
+    import inspect
+
+    from uforwarder_spark.streaming import pipelines
+
+    helpers = {"_path", "_prev", "_merge", "_commit", "_read_pages", "_start"}
+    src = inspect.getsource(pipelines)
+    lines = src.splitlines()
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef) and node.name in helpers:
+            for i in range(node.lineno - 1, node.end_lineno):
+                lines[i] = ""
+    assert all(h in vars(pipelines) for h in helpers)
+    rest = "".join("\n".join(lines).split())
+    for banned in (
+        "trigger(availableNow=True)",
+        "batch_id={batch_id-1}",
+        "coalesce(1).write",
+    ):
+        assert banned not in rest, f"{banned!r} outside the state helpers"

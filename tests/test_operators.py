@@ -1267,3 +1267,53 @@ def test_health_retry_queue_config_is_per_topic(spark):
     got = {r.topic: r for r in _hmsgs(spark, rows).collect()}
     assert got[NO_RETRY_QUEUE_TOPIC].wins_retry_no_queue == 1
     assert got["click"].wins_retry_no_queue == 0
+
+
+def _seeded_event_log(n: int, seed: int):
+    """A synthetic ``events`` table: ids 0..n-1 in ts order over 30
+    days, the sf tables' schema, fully determined by (n, seed)."""
+    import numpy as np
+    import pyarrow as pa
+
+    rng = np.random.default_rng(np.random.SeedSequence(seed).spawn(3)[0])
+    t0 = np.datetime64("2024-01-01T00:00:00", "us").astype(np.int64)
+    ts = t0 + np.sort(rng.integers(0, 30 * 86_400 * 1_000_000, size=n))
+    n_users = max(1, round(n * 0.015))
+    value = np.round(rng.exponential(50.0, size=n), 2)
+    props = [f'{{"k": {k}}}' for k in rng.integers(0, 100, size=n)]
+    types = ["click", "error", "purchase", "signup", "view"]
+    return pa.table(
+        {
+            "event_id": pa.array(np.arange(n, dtype=np.int64)),
+            "ts": pa.array(ts, type=pa.timestamp("us")),
+            "user_id": pa.array(rng.integers(0, n_users, size=n, dtype=np.int64)),
+            "event_type": pa.array(rng.choice(types, size=n)),
+            "value": pa.array(value),
+            "props": pa.array(props),
+        }
+    )
+
+
+def test_scale_window_samples_are_double_like_the_oracle(spark, tmp_path):
+    """Per-window msgs/s is count / 300.0. DuckDB computes it in DOUBLE;
+    Spark SQL would type it DECIMAL(27,6) and round to 6 dp. On this
+    20,000-event log that rounding moves topic 'error's down proposal
+    from 0.800 to 0.805, flipping down_accepted and the reactive
+    branch, so both scale keys must match their oracles here."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from tests.parity import assert_parity
+    from uforwarder_spark.registry import ORACLES, QUERIES
+
+    pq.write_table(_seeded_event_log(20_000, 1), str(tmp_path / "events.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    try:
+        for key in ("scale_window_proposal", "reactive_downscale_window"):
+            got = QUERIES[key](spark, str(tmp_path)).toPandas()
+            assert_parity(got, con.execute(ORACLES[key]).fetchdf(), key)
+    finally:
+        con.close()

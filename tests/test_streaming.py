@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_MED, SF_SMALL
+from tests.state_dirs import latest_batch_id
 from uforwarder_spark import model
 from uforwarder_spark.streaming import pipelines as P
 
@@ -1040,8 +1041,6 @@ def test_e19_importance_weights_matches_batch(spark, tmp_path):
     """E19: after the incremental monitor drains, the latest weight
     table equals batch D39 over the same corpus; the totals merged
     across micro-batches (no batch re-reads the corpus)."""
-    import os
-
     from uforwarder_spark.model import load_parallel
     from uforwarder_spark.operators.training import importance_sampling_weights
 
@@ -1062,10 +1061,7 @@ def test_e19_importance_weights_matches_batch(spark, tmp_path):
     q = P.importance_weights_pipeline(stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    latest = max(
-        int(d.split("=")[1]) for d in os.listdir(f"{state}/weights")
-        if d.startswith("batch_id=")
-    )
+    latest = latest_batch_id(f"{state}/weights")
     assert latest >= 1  # the merge crossed at least one micro-batch boundary
     got = (
         spark.read.parquet(f"{state}/weights/batch_id={latest}")
@@ -1140,13 +1136,7 @@ def test_e21_entropy_monitor_converges_to_batch(spark, tmp_path):
     )
     q.awaitTermination(timeout=300)
 
-    import os
-
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/entropy")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/entropy")
     cols = ["source", "n_tokens", "n_bigrams", "unigram_entropy", "bigram_entropy", "cond_entropy"]
     got = (
         spark.read.parquet(f"{state}/entropy/batch_id={last}")
@@ -1173,7 +1163,6 @@ def test_e22_hll_monitor_converges_to_batch(spark, tmp_path):
     estimate must equal batch D49's bit-for-bit (MAX-merge makes order
     and replay irrelevant)."""
     import math
-    import os
 
     from uforwarder_spark.functions.text import hll_distinct_tokens
     from uforwarder_spark.model import load_parallel
@@ -1188,11 +1177,7 @@ def test_e22_hll_monitor_converges_to_batch(spark, tmp_path):
     )
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/estimate")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/estimate")
     assert last >= 1  # the merge path ran
     got = {
         r.source: r.est
@@ -1208,8 +1193,6 @@ def test_e23_hdr_quantiles_converge_to_batch(spark, tmp_path):
     """E23: once the message stream drains, the final quantile estimates
     must equal batch D54's est_value column exactly — the fixed bucket
     boundaries make the additive merge order-free."""
-    import os
-
     from uforwarder_spark.operators.timeseries import hdr_histogram_quantiles
 
     from uforwarder_spark.model import messages
@@ -1225,11 +1208,7 @@ def test_e23_hdr_quantiles_converge_to_batch(spark, tmp_path):
     )
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/quantiles")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/quantiles")
     assert last >= 1  # the merge path (not just the first batch) ran
     got = {
         (r.topic, round(r.q, 2)): round(r.est, 6)
@@ -1297,8 +1276,6 @@ def test_e24_funnel_stream_matches_batch(spark, tmp_path):
 def test_e25_bm25_index_converges_to_batch(spark, tmp_path):
     """E25: after the document stream drains, the live index's top-K
     equals batch D57's ranking bit-for-bit."""
-    import os
-
     from uforwarder_spark.functions.text import bm25_topk
     from uforwarder_spark.model import load_parallel
 
@@ -1312,11 +1289,7 @@ def test_e25_bm25_index_converges_to_batch(spark, tmp_path):
     )
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/topk")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/topk")
     assert last >= 1  # the merge path ran
     got = {
         r.doc_id: r.bm25_score
@@ -1543,8 +1516,6 @@ def test_e30_system_load_converges_to_batch(spark, tmp_path):
     merge through the shared system_load_from kernel). The log is
     written as 4 files so the counters actually merge across several
     micro-batches."""
-    import os
-
     from uforwarder_spark.operators.controller import system_load_ratio
 
     src = str(tmp_path / "src")
@@ -1557,11 +1528,7 @@ def test_e30_system_load_converges_to_batch(spark, tmp_path):
     )
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/load")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/load")
     assert last >= 1  # the merge path ran
     cols = ["topic", "n_jobs", "n_capped", "demand_micro", "system_load", "utilization"]
     got = (
@@ -1579,6 +1546,40 @@ def test_e30_system_load_converges_to_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_e30_state_layout_one_version_per_trigger(spark, tmp_path):
+    """The versioned-state layout: three triggers leave batch_id=0..2
+    under each of E30's tables, every version written by one writer as
+    exactly one part file, and no version is deleted. AQE's partition
+    coalescing is off for the run: at this size it would merge the
+    state's shuffle partitions into one file by itself, and the single
+    part file must come from the writer, as it does at scale."""
+    import os
+
+    src = str(tmp_path / "src")
+    model.messages(spark, SF_SMALL).repartition(3).write.parquet(src)
+    state = str(tmp_path / "state")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        P.system_load_pipeline(
+            P.message_stream(spark, src, files_per_trigger=1), state, str(tmp_path / "ckpt")
+        ).awaitTermination(timeout=300)
+    finally:
+        spark.conf.set(key, before)
+
+    for kind in ("jobs", "load"):
+        assert sorted(os.listdir(f"{state}/{kind}")) == [
+            f"batch_id={n}" for n in range(3)
+        ]
+        for n in range(3):
+            parts = [
+                f for f in os.listdir(f"{state}/{kind}/batch_id={n}")
+                if f.startswith("part-")
+            ]
+            assert len(parts) == 1, (kind, n, parts)
 
 
 def test_e31_query_serving_matches_batch(spark, tmp_path):
@@ -1629,8 +1630,6 @@ def test_e32_snapshot_diff_converges_to_batch(spark, tmp_path):
     batch D70 bit-for-bit. The feed is split across 4 files so the
     per-(source, status) counters actually fold across several
     micro-batches, and upserts/tombstones land in different triggers."""
-    import os
-
     from uforwarder_spark.operators.training import (
         SNAP_REMOVED_OFFSET,
         corpus_snapshot_diff,
@@ -1683,11 +1682,7 @@ def test_e32_snapshot_diff_converges_to_batch(spark, tmp_path):
     q = P.snapshot_diff_pipeline(stream, prior, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/ledger")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/ledger")
     assert last >= 1  # the ledger actually folded across triggers
     cols = ["source", "status", "n_docs", "bytes_delta"]
     got = (
@@ -1790,8 +1785,6 @@ def test_e35_quality_mixture_converges_to_batch(spark, tmp_path):
     """E35: after the doc stream drains, the per-(source, decile)
     mixture state equals batch D75 rolled up bit-for-bit (additive
     counters through the shared qc_frame kernel)."""
-    import os
-
     from uforwarder_spark.functions.text import quality_classifier_score
     from uforwarder_spark.model import load_parallel
 
@@ -1810,11 +1803,7 @@ def test_e35_quality_mixture_converges_to_batch(spark, tmp_path):
     q = P.quality_mixture_pipeline(stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/mix")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/mix")
     assert last >= 1  # the merge path ran
     cols = ["source", "quality_decile", "n_docs", "n_tokens", "n_keep"]
     got = (
@@ -1855,8 +1844,6 @@ def test_e36_index_drift_converges_to_batch(spark, tmp_path):
     """E36: after the vector stream drains, the derived drift table
     equals batch D79 bit-for-bit (additive count + DECIMAL-summed
     distance counters through the shared drift_stats_from kernel)."""
-    import os
-
     from uforwarder_spark.operators.similarity import _emb, index_drift_stats
 
     e = _emb(spark, SF_SMALL)
@@ -1872,11 +1859,7 @@ def test_e36_index_drift_converges_to_batch(spark, tmp_path):
     q = P.index_drift_pipeline(stream, reps, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/drift")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/drift")
     assert last >= 1  # the merge path ran
     cols = ["cell", "n_members", "mean_sq_dist", "load_share", "drifted", "overloaded"]
     got = (
@@ -1957,8 +1940,6 @@ def test_e38_kmv_sketches_converge_to_batch(spark, tmp_path):
     sketches yield pair estimates equal to batch D81's estimate columns
     bit-for-bit (sketch mergeability: distinct-union + bottom-k per
     trigger = bottom-k of the whole corpus)."""
-    import os
-
     from uforwarder_spark.model import load_parallel
     from uforwarder_spark.operators.dedup import kmv_sketch_overlap
 
@@ -1977,11 +1958,7 @@ def test_e38_kmv_sketches_converge_to_batch(spark, tmp_path):
     q = P.kmv_sketch_pipeline(stream, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/pairs")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/pairs")
     assert last >= 1  # the merge path ran
     cols = ["src_a", "src_b", "k_used", "kmv_jacc", "kmv_union_est", "kmv_inter_est"]
     got = (
@@ -2086,13 +2063,7 @@ def test_e40_vocab_growth_converges_to_batch(spark, tmp_path):
     qy = P.vocab_growth_pipeline(stream, state, str(tmp_path / "ckpt"))
     qy.awaitTermination(timeout=300)
 
-    import os
-
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/fit")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/fit")
     assert last >= 2  # the fold really crossed micro-batches
     cols = ["source", "n_points", "n_tokens", "n_types", "heaps_beta", "heaps_lnk", "r2"]
     got = (
@@ -2253,8 +2224,6 @@ def test_e46_untracked_types_are_surfaced(spark, tmp_path):
     not vanish — it cannot be standardized, so it lands in the
     untracked/ output with its minute and event counts while tracked
     types keep their trajectory rows."""
-    import os
-
     ref = spark.createDataFrame(
         [("click", "2024-01-01 00:%02d:00" % i, i) for i in range(10)],
         ["event_type", "ts_s", "event_id"],
@@ -2278,11 +2247,7 @@ def test_e46_untracked_types_are_surfaced(spark, tmp_path):
     q = P.cusum_monitor_pipeline(stream, ref, state, str(tmp_path / "ckpt"))
     q.awaitTermination(timeout=300)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{state}/untracked")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{state}/untracked")
     untracked = (
         spark.read.parquet(f"{state}/untracked/batch_id={last}")
         .toPandas().sort_values("event_type").reset_index(drop=True)

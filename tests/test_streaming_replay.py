@@ -34,6 +34,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+from tests.state_dirs import latest_batch_id
 from uforwarder_spark.streaming import pipelines as P
 
 import pytest
@@ -661,11 +662,7 @@ def test_e22_hll_replay_idempotent_and_converges(
         ["{tmp}/state/regs/batch_id={bid}", "{tmp}/state/estimate/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e22rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/estimate")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/estimate")
     got_regs = _sorted_pdf(spark, f"{tmp}/state/regs/batch_id={last}")
     want_regs = (
         hll_register_frame(docs).toPandas()[got_regs.columns.tolist()]
@@ -719,11 +716,7 @@ def test_e27_dsir_replay_idempotent_and_converges(
         ["{tmp}/state/counts/batch_id={bid}", "{tmp}/state/ratio/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e27rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ratio")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ratio")
     got = {
         r.b: r.lr
         for r in spark.read.parquet(f"{tmp}/state/ratio/batch_id={last}").collect()
@@ -911,11 +904,7 @@ def test_e30_system_load_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/load")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/load")
     cols = ["topic", "n_jobs", "n_capped", "demand_micro", "system_load", "utilization"]
     got = (
         spark.read.parquet(f"{tmp}/state/load/batch_id={last}")
@@ -954,11 +943,7 @@ def test_e19_weights_replay_idempotent_and_converges(
         ["{tmp}/state/totals/batch_id={bid}", "{tmp}/state/weights/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e19rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/weights")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/weights")
     got = (
         spark.read.parquet(f"{tmp}/state/weights/batch_id={last}")
         .toPandas().sort_values("source").reset_index(drop=True)
@@ -1000,11 +985,7 @@ def test_e21_entropy_replay_idempotent_and_converges(
         ],
         n_chunks, assign_seed, restart_at, "e21rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/entropy")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/entropy")
     cols = ["source", "n_tokens", "n_bigrams", "unigram_entropy",
             "bigram_entropy", "cond_entropy"]
     got = (
@@ -1079,11 +1060,7 @@ def test_e23_hdr_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/quantiles")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/quantiles")
     got = {
         (r.topic, round(r.q, 2)): round(r.est, 6)
         for r in spark.read.parquet(f"{tmp}/state/quantiles/batch_id={last}").collect()
@@ -1125,11 +1102,7 @@ def test_e25_bm25_replay_idempotent_and_converges(
         ],
         n_chunks, assign_seed, restart_at, "e25rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/topk")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/topk")
     got = {
         r.doc_id: r.bm25_score
         for r in spark.read.parquet(f"{tmp}/state/topk/batch_id={last}").collect()
@@ -1400,11 +1373,7 @@ def test_e32_snapshot_diff_replay_idempotent_and_converges(
     run_phase()
     pd.testing.assert_frame_equal(_sorted_pdf(spark, path), before, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ledger")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ledger")
     out_cols = ["source", "status", "n_docs", "bytes_delta"]
     got = (
         spark.read.parquet(f"{tmp}/state/ledger/batch_id={last}")
@@ -1559,11 +1528,7 @@ def test_e35_quality_mixture_replay_idempotent_and_converges(
         spark, docs_pdf, make_query, ["{tmp}/state/mix/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e35rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/mix")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/mix")
     cols = ["source", "quality_decile", "n_docs", "n_tokens", "n_keep"]
     got = (
         spark.read.parquet(f"{tmp}/state/mix/batch_id={last}")
@@ -1636,11 +1601,7 @@ def test_e36_index_drift_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/drift")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/drift")
     cols = ["cell", "n_members", "mean_sq_dist", "load_share", "drifted", "overloaded"]
     got = (
         spark.read.parquet(f"{tmp}/state/drift/batch_id={last}")
@@ -1680,11 +1641,7 @@ def test_e38_kmv_sketch_replay_idempotent_and_converges(
         ["{tmp}/state/sketch/batch_id={bid}", "{tmp}/state/pairs/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e38rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/pairs")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/pairs")
     cols = ["src_a", "src_b", "k_used", "kmv_jacc", "kmv_union_est", "kmv_inter_est"]
     got = (
         spark.read.parquet(f"{tmp}/state/pairs/batch_id={last}")
@@ -1760,11 +1717,7 @@ def test_e40_vocab_growth_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/fit")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/fit")
     cols = ["source", "n_points", "n_tokens", "n_types", "heaps_beta", "heaps_lnk", "r2"]
     got = (
         spark.read.parquet(f"{tmp}/state/fit/batch_id={last}")
@@ -1837,11 +1790,7 @@ def test_e41_zipf_drift_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/fit")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/fit")
     cols = ["source", "n_types", "n_tokens", "zipf_slope", "r2"]
     got = (
         spark.read.parquet(f"{tmp}/state/fit/batch_id={last}")
@@ -1916,11 +1865,7 @@ def test_e43_pmi_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/topk")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/topk")
     cols = ["rank", "tok_l", "tok_r", "pair_freq", "freq_l", "freq_r", "pmi"]
     got = (
         spark.read.parquet(f"{tmp}/state/topk/batch_id={last}")
@@ -1996,11 +1941,7 @@ def test_e45_markov_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/table")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/table")
     cols = ["event_from", "event_to", "n_trans", "from_total", "prob", "rank"]
     got = (
         spark.read.parquet(f"{tmp}/state/table/batch_id={last}")
@@ -2091,11 +2032,7 @@ def test_e46_cusum_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/table")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/table")
     cols = ["event_type", "n_minutes", "n_alarms", "first_alarm_idx", "max_s", "final_s"]
     got = (
         spark.read.parquet(f"{tmp}/state/table/batch_id={last}")
@@ -2184,11 +2121,7 @@ def test_e47_doremi_replay_idempotent_and_converges(
     for p, snap in before.items():
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/weights")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/weights")
     cols = ["source", "n_tok", "mean_ce", "excess", "weight"]
     got = (
         spark.read.parquet(f"{tmp}/state/weights/batch_id={last}")
@@ -2264,12 +2197,7 @@ def test_empty_trigger_leaves_state_unchanged(spark, name, pipe):
 
     tables = _batch_versioned_dirs(state)
     assert tables, f"{name}: no batchId-versioned state found"
-    last = max(
-        int(d.split("=")[1])
-        for t in tables
-        for d in os.listdir(t)
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(*tables)
     before = {t: _sorted_pdf(spark, f"{t}/batch_id={last}") for t in tables}
 
     # land ONE empty chunk -> one zero-row micro-batch
@@ -2312,14 +2240,7 @@ def _empty_trigger_check(spark, chunks_pdf, schema, make_query, prefix,
     out_root = os.path.join(tmp, "out")
     if expect_out_dir is None:
         assert tables, f"{prefix}: no batchId-versioned state found"
-    last = max(
-        (
-            int(d.split("=")[1])
-            for root in (tables + ([out_root] if expect_out_dir else []))
-            for d in os.listdir(root)
-            if d.startswith("batch_id=")
-        ),
-    )
+    last = latest_batch_id(*tables, *([out_root] if expect_out_dir else []))
     before = {t: _sorted_pdf(spark, f"{t}/batch_id={last}") for t in tables}
     _write_chunks(
         spark, [chunks_pdf[0].iloc[0:0]], schema, src, now, start_idx=len(chunks_pdf)
@@ -2527,11 +2448,7 @@ def test_e50_fertility_replay_idempotent_and_converges(
         ["{tmp}/state/fert/batch_id={bid}", "{tmp}/state/ratios/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e50rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ratios")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ratios")
     cols = [
         "source", "n_docs", "ws_tokens", "bpe_tokens", "n_chars",
         "fertility", "chars_per_token",
@@ -2594,11 +2511,7 @@ def test_e51_unigram_fertility_replay_idempotent_and_converges(
         ["{tmp}/state/fert/batch_id={bid}", "{tmp}/state/ratios/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e51rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ratios")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ratios")
     cols = [
         "source", "n_docs", "ws_tokens", "sp_tokens", "n_chars",
         "fertility", "chars_per_token",
@@ -2676,11 +2589,7 @@ def test_e51_oov_words_segment_exactly(spark):
     )
     q = P.unigram_fertility_pipeline(stream, docs, os.path.join(tmp, "state"), ckpt)
     q.awaitTermination(timeout=300)
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ratios")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ratios")
     row = (
         spark.read.parquet(f"{tmp}/state/ratios/batch_id={last}")
         .filter(F.col("source") == "oov")
@@ -2870,11 +2779,7 @@ def test_markov_reorder_gate_absorbs_bounded_disorder(spark):
         )
         q = P.markov_monitor_pipeline(stream, os.path.join(tmp, "state"), ckpt, **kw)
         q.awaitTermination(timeout=300)
-        last = max(
-            int(d.split("=")[1])
-            for d in os.listdir(f"{tmp}/state/table")
-            if d.startswith("batch_id=")
-        )
+        last = latest_batch_id(f"{tmp}/state/table")
         return spark.read.parquet(f"{tmp}/state/table/batch_id={last}")
 
     cols = ["event_from", "event_to", "n_trans", "from_total", "prob", "rank"]
@@ -2977,11 +2882,7 @@ def test_e52_wordpiece_fertility_replay_idempotent_and_converges(
         ["{tmp}/state/fert/batch_id={bid}", "{tmp}/state/ratios/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e52rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/ratios")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/ratios")
     cols = [
         "source", "n_docs", "ws_tokens", "wp_tokens", "n_chars",
         "fertility", "chars_per_token",
@@ -3171,11 +3072,7 @@ def test_reorder_gate_equal_ts_at_watermark_boundary(spark):
         stream, os.path.join(tmp, "state"), ckpt, reorder_watermark_s=W
     )
     q.awaitTermination(timeout=300)
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/table")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/table")
     got = sorted(
         map(
             tuple,
@@ -3556,11 +3453,7 @@ def test_e53_domain_caps_replay_idempotent_and_converges(
         pd.testing.assert_frame_equal(_sorted_pdf(spark, p), snap, check_exact=True)
 
     # drained domains table == batch D103, bit-for-bit
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/domains")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/domains")
     want = domain_dedup_caps(spark, SF_SMALL).toPandas()
     cols = want.columns.tolist()
     got = (
@@ -3617,11 +3510,7 @@ def test_e54_multi_epoch_replay_idempotent_and_converges(
         ["{tmp}/state/totals/batch_id={bid}", "{tmp}/state/epochs/batch_id={bid}"],
         n_chunks, assign_seed, restart_at, "e54rr",
     )
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(f"{tmp}/state/epochs")
-        if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(f"{tmp}/state/epochs")
     want = multi_epoch_token_accounting(spark, SF_SMALL).toPandas()
     cols = want.columns.tolist()
     got = (
@@ -3767,9 +3656,7 @@ def test_empty_trigger_e53_domain_caps(spark):
 
     run_phase()
     dom = os.path.join(state, "domains")
-    last = max(
-        int(d.split("=")[1]) for d in os.listdir(dom) if d.startswith("batch_id=")
-    )
+    last = latest_batch_id(dom)
     before = _sorted_pdf(spark, f"{dom}/batch_id={last}")
     _write_chunks(spark, [docs_pdf.iloc[0:0]], DOCS_SCHEMA, src, now, start_idx=2)
     run_phase()

@@ -149,7 +149,10 @@ def _computer_ctes() -> str:
 
 
 # samples CTE per dialect: per (topic, 5-min window) msgs/s, expressed
-# in scale units s = mps / (quota/4).
+# in scale units s = mps / (quota/4). DuckDB divides a BIGINT by the
+# literal 300.0 in DOUBLE; Spark SQL types the literal DECIMAL(4,1) and
+# the quotient DECIMAL(27,6), rounding it to 6 dp — enough to move a
+# sample across a bucket bound — so the Spark CTE casts to DOUBLE first.
 _SAMPLES_DUCK = f"""
 windows AS (
   SELECT topic, (CAST(floor(epoch(ts)) AS BIGINT) // 300) * 300 AS window_epoch,
@@ -166,7 +169,7 @@ samples AS (
 _SAMPLES_SPARK = f"""
 windows AS (
   SELECT topic, CAST(unix_timestamp(ts) DIV 300 AS BIGINT) * 300 AS window_epoch,
-         count(*) / 300.0 AS mps
+         CAST(count(*) AS DOUBLE) / 300.0 AS mps
   FROM messages GROUP BY 1, 2
 ),
 samples AS (

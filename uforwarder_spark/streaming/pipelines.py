@@ -65,9 +65,16 @@ MESSAGE_SCHEMA = StructType(
 MAX_RETRIES = 5  # reference RetryUtils: retries exhausted → DLQ
 
 
-def _read_state_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a prior-batch state table, or None if it was never written
-    (expected before the first committed micro-batch).
+# --- batchId-versioned state ------------------------------------------------
+def _path(base: str, kind: str | None, batch_id: int) -> str:
+    """``{base}/{kind}/batch_id=N``, or ``{base}/batch_id=N`` for a
+    sink that is a single table."""
+    return f"{base}/{kind}/batch_id={batch_id}" if kind else f"{base}/batch_id={batch_id}"
+
+
+def _prev(spark: SparkSession, base: str, kind: str, batch_id: int) -> DataFrame | None:
+    """Batch N-1's version of the ``kind`` table, or None if it was never
+    written (expected before the first committed micro-batch).
 
     A bare ``except Exception`` here would also swallow transient read
     failures (FS hiccup, truncated footer) and silently reset the
@@ -75,12 +82,76 @@ def _read_state_parquet(spark: SparkSession, path: str) -> DataFrame | None:
     tables would still look valid, so the reset would be invisible.
     Probe existence explicitly with the Hadoop FS API and let any real
     read error propagate so the trigger fails and retries instead."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
+    path = _path(base, kind, batch_id - 1)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return None
     return spark.read.parquet(path)
+
+
+def _merge(batch: DataFrame, prev: DataFrame | None, keys, *aggs) -> DataFrame:
+    """Fold a micro-batch's partial table into batch N-1's: ``batch``
+    alone on the first trigger, else the union regrouped by ``keys``."""
+    if prev is None:
+        return batch
+    return batch.unionByName(prev).groupBy(*keys).agg(*aggs)
+
+
+def _commit(df: DataFrame, base: str, kind: str | None, batch_id: int) -> str:
+    """Write ``df`` as version N of a table — one part file, overwriting
+    ``{base}/{kind}/batch_id=N`` — and return that path; callers that
+    derive further tables from it re-read the path, so every derivation
+    sees the committed bytes instead of recomputing the fold.
+
+    REPLAY CONTRACT, shared by every pipeline below: foreachBatch is
+    at-least-once — a crash between this write and the checkpoint
+    commit re-runs batch N with the same rows. Each table has ONE
+    writer (its pipeline's batch function), version N is derived only
+    from batch N's rows and the N-1 versions (``_prev``; the pages up
+    to N-1 for an append-only ledger, ``_read_pages``), and the write
+    overwrites N instead of appending. A replay therefore rewrites the
+    same directory with the same content, which makes the sinks
+    effectively exactly-once. Old versions are never deleted: a replay
+    of N must still find N-1, so on-disk state grows O(triggers × state
+    size) until a retention policy exists."""
+    path = _path(base, kind, batch_id)
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    return path
+
+
+def _read_pages(spark: SparkSession, base: str, kind: str, upto: int) -> DataFrame | None:
+    """Union of an append-only ledger's pages with batch_id <= upto — a
+    crashed batch's own leftover page is excluded, so replays re-derive
+    from exactly the pre-batch ledger.
+
+    Only the genuinely-no-pages case returns None: a page dir with no
+    part files is a crashed write's empty leftover (the rename into
+    place never happened) and is skipped, but a dir WITH part files
+    that fails to read (truncated footer, FS corruption) must PROPAGATE
+    — a bare except here would silently empty the whole ledger,
+    re-admitting every previously-seen key with no error surfaced
+    (ADVICE r10). Failing the trigger so it retries is strictly safer
+    than silently dropping dedup history."""
+    import glob
+
+    dirs = [
+        p
+        for p in glob.glob(f"{base}/{kind}/batch_id=*")
+        if p.rsplit("=", 1)[-1].isdigit()
+        and int(p.rsplit("=", 1)[-1]) <= upto
+        and glob.glob(f"{p}/part-*")
+    ]
+    return spark.read.parquet(*dirs) if dirs else None
+
+
+def _start(stream: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str):
+    """Run ``fn`` on every micro-batch until the backlog drains."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def reorder_gate(
@@ -127,8 +198,7 @@ def reorder_gate(
 
     SCALE: O(arrival-rate × watermark_s) held rows, one 1-row
     broadcast max per trigger, no shuffle — the filter is map-side."""
-    spark = ev.sparkSession
-    held_prev = _read_state_parquet(spark, f"{state_dir}/held/batch_id={batch_id - 1}")
+    held_prev = _prev(ev.sparkSession, state_dir, "held", batch_id)
     combined = ev if held_prev is None else ev.unionByName(held_prev)
     wm = combined.agg(
         (F.max("ts").cast("long") - watermark_s).alias("wm")
@@ -140,9 +210,7 @@ def reorder_gate(
     held = c.filter(
         (F.col("ts").cast("long") >= F.col("wm")) & F.col("ts").isNotNull()
     ).drop("wm")
-    held.coalesce(1).write.mode("overwrite").parquet(
-        f"{state_dir}/held/batch_id={batch_id}"
-    )
+    _commit(held, state_dir, "held", batch_id)
     return released
 
 
@@ -248,13 +316,7 @@ def dispatch_pipeline(
     the Spark-idiomatic RPC edge: exactly-once per batch id, retried
     batches re-invoke with the same id so the callee can dedupe (which is
     precisely what DedupHeaderInterceptor.java guards)."""
-    return (
-        route_stream(stream)
-        .writeStream.foreachBatch(dispatch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(route_stream(stream), dispatch, checkpoint_dir)
 
 
 # --- E2: windowed throughput with watermark -------------------------------
@@ -486,12 +548,10 @@ def outcome_fanout_pipeline(stream: DataFrame, out_dir: str, checkpoint_dir: str
 
     SCALE: one foreachBatch with three filtered writes of the SAME
     cached micro-batch — the batch is scanned once, not three times.
-    foreachBatch is at-least-once (a crash between a write and the
-    checkpoint commit replays the batch), so each write targets a
-    batchId-keyed partition directory with overwrite: a replayed batch
-    rewrites its own directory instead of appending duplicates, making
-    the sinks effectively exactly-once. Readers see batch_id as a
-    partition column."""
+    Each write overwrites its batchId-keyed directory, so a replayed
+    batch rewrites instead of appending (the ``_commit`` replay
+    contract; these sinks keep Spark's default part-file count).
+    Readers see batch_id as a partition column."""
     def fan_out(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
@@ -504,18 +564,11 @@ def outcome_fanout_pipeline(stream: DataFrame, out_dir: str, checkpoint_dir: str
                 | ((F.col("outcome") == "RETRY") & (F.col("retry_count") >= MAX_RETRIES))
             )
             for name, part in (("delivered", delivered), ("retry", retry), ("dlq", dlq)):
-                part.write.mode("overwrite").parquet(
-                    f"{out_dir}/{name}/batch_id={batch_id}"
-                )
+                part.write.mode("overwrite").parquet(_path(out_dir, name, batch_id))
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(fan_out)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fan_out, checkpoint_dir)
 
 
 # --- E8: stream-stream redelivery correlation -----------------------------
@@ -1161,7 +1214,7 @@ def incremental_dedup_pipeline(
     kept docs are admitted); each trigger touches only
     |batch| × colliding-bucket candidates. foreachBatch is at-least-once,
     so each batch overwrites its own batch_id=N directory — replays
-    rewrite instead of duplicating (same exactly-once shape as E7)."""
+    rewrite instead of duplicating (the ``_commit`` replay contract)."""
     from ..operators.dedup import (
         incr_band_frame,
         incr_shingle_frame,
@@ -1176,16 +1229,11 @@ def incremental_dedup_pipeline(
         in_sh3 = incr_shingle_frame(batch_df.select("doc_id", "text")).persist()
         try:
             decisions = incremental_dedup_frame(in_sh3, ex_bands, ex_sh3)
-            decisions.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+            decisions.write.mode("overwrite").parquet(_path(out_dir, None, batch_id))
         finally:
             in_sh3.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, dedup_batch, checkpoint_dir)
 
 
 # --- E16: live AIMD inflight limit ----------------------------------------
@@ -1420,53 +1468,47 @@ def importance_weights_pipeline(
     batch_id=N`` the weight table derived from them. foreachBatch is
     at-least-once, and a replay of batch N re-merges the SAME batch
     data with the SAME N-1 totals into the same directory — idempotent
-    by construction (same exactly-once shape as E7/E15).
+    by construction (the ``_commit`` replay contract).
 
     SCALE: each trigger aggregates only its micro-batch (partial agg on
     source) and merges against a |sources|-row table; the weight math
     is the identical decimal-denominator pipeline as D39 on a frame of
     |sources| rows. Nothing ever re-reads the corpus."""
-    from ..functions.tokenize import TOKENS_SPARK
     from ..operators.training import weights_from_totals
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_tot = (
-            batch_df.select(
-                "source",
-                F.expr(f"CAST(size({TOKENS_SPARK}) AS BIGINT)").alias("n_tok"),
-            )
-            .groupBy("source")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tok").cast("bigint").alias("n_tokens"),
-            )
-        )
-        prev = _read_state_parquet(spark, f"{state_dir}/totals/batch_id={batch_id - 1}")
-        merged = (
-            batch_tot if prev is None
-            else batch_tot.unionByName(prev)
-            .groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/totals/batch_id={batch_id}"
-        )
-        totals = spark.read.parquet(f"{state_dir}/totals/batch_id={batch_id}")
-        weights = weights_from_totals(totals)
-        weights.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/weights/batch_id={batch_id}"
-        )
+        totals = _fold_source_totals(batch_df, state_dir, batch_id)
+        _commit(weights_from_totals(totals), state_dir, "weights", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(stream, update, checkpoint_dir)
+
+
+def _fold_source_totals(batch_df: DataFrame, state_dir: str, batch_id: int) -> DataFrame:
+    """The running (source, n_docs, n_tokens) totals after batch N,
+    committed to ``{state_dir}/totals`` and re-read — the additive
+    state E19 and E54 both derive from."""
+    from ..functions.tokenize import TOKENS_SPARK
+
+    spark = batch_df.sparkSession
+    batch_tot = (
+        batch_df.select(
+            "source",
+            F.expr(f"CAST(size({TOKENS_SPARK}) AS BIGINT)").alias("n_tok"),
+        )
+        .groupBy("source")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tok").cast("bigint").alias("n_tokens"),
+        )
     )
+    merged = _merge(
+        batch_tot,
+        _prev(spark, state_dir, "totals", batch_id),
+        ["source"],
+        F.sum("n_docs").cast("bigint").alias("n_docs"),
+        F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+    )
+    return spark.read.parquet(_commit(merged, state_dir, "totals", batch_id))
 
 
 # --- E20: live Bloom dedup prefilter ---------------------------------------
@@ -1485,7 +1527,7 @@ def bloom_prefilter_pipeline(
     corpus); each trigger is |batch| rows of pure expression work plus
     an exact join over its maybe-dup sliver. foreachBatch overwrites
     its own batch_id=N directory, so at-least-once replays rewrite
-    instead of duplicating (same exactly-once shape as E7/E15)."""
+    instead of duplicating (the ``_commit`` replay contract)."""
     from ..operators.dedup import bloom_bits_frame, bloom_hash_frame, bloom_prefilter_frame
 
     bits = bloom_bits_frame(corpus_docs.select("doc_id", "text")).persist()
@@ -1501,14 +1543,9 @@ def bloom_prefilter_pipeline(
         decisions = bloom_prefilter_frame(
             bloom_hash_frame(batch_df.select("doc_id", "text")), bits, exist_h
         )
-        decisions.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        decisions.write.mode("overwrite").parquet(_path(out_dir, None, batch_id))
 
-    return (
-        stream.writeStream.foreachBatch(prefilter_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, prefilter_batch, checkpoint_dir)
 
 
 # --- E21: live corpus-entropy monitor --------------------------------------
@@ -1527,7 +1564,7 @@ def entropy_monitor_pipeline(
     (source, g, c) counts AFTER batch N; ``{state_dir}/entropy/
     batch_id=N`` the derived table. A replay of batch N re-merges the
     SAME batch against the SAME N-1 totals into the same directory —
-    idempotent under at-least-once (the E19 shape).
+    idempotent under at-least-once (the ``_commit`` replay contract).
 
     SCALE: counts are additive, so each trigger aggregates only its
     micro-batch and merges against the vocabulary-sized totals —
@@ -1541,34 +1578,21 @@ def entropy_monitor_pipeline(
     )
     from ..functions.tokenize import TOKENS_SPARK
 
-    def merge_counts(spark, batch_cnt: DataFrame, kind: str, batch_id: int) -> None:
-        prev = _read_state_parquet(spark, f"{state_dir}/{kind}/batch_id={batch_id - 1}")
-        merged = (
-            batch_cnt if prev is None
-            else batch_cnt.unionByName(prev)
-            .groupBy("source", "g")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/{kind}/batch_id={batch_id}"
-        )
+    def merge_counts(spark, batch_cnt: DataFrame, kind: str, batch_id: int) -> str:
+        prev = _prev(spark, state_dir, kind, batch_id)
+        merged = _merge(batch_cnt, prev, ["source", "g"], F.sum("c").cast("bigint").alias("c"))
+        return _commit(merged, state_dir, kind, batch_id)
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        merge_counts(spark, gram_counts_frame(batch_df, TOKENS_SPARK), "uni", batch_id)
-        merge_counts(spark, gram_counts_frame(batch_df, _BIGRAMS_SPARK), "big", batch_id)
-        uni = spark.read.parquet(f"{state_dir}/uni/batch_id={batch_id}")
-        big = spark.read.parquet(f"{state_dir}/big/batch_id={batch_id}")
-        entropy_from_counts(uni, big).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/entropy/batch_id={batch_id}"
-        )
+        paths = [
+            merge_counts(spark, gram_counts_frame(batch_df, grams), kind, batch_id)
+            for kind, grams in (("uni", TOKENS_SPARK), ("big", _BIGRAMS_SPARK))
+        ]
+        uni, big = (spark.read.parquet(p) for p in paths)
+        _commit(entropy_from_counts(uni, big), state_dir, "entropy", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E22: live distinct-cardinality monitor --------------------------------
@@ -1596,28 +1620,14 @@ def hll_monitor_pipeline(
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_regs = hll_register_frame(batch_df)
-        prev = _read_state_parquet(spark, f"{state_dir}/regs/batch_id={batch_id - 1}")
-        merged = (
-            batch_regs if prev is None
-            else batch_regs.unionByName(prev)
-            .groupBy("source", "reg")
-            .agg(F.max("r").alias("r"))
+        prev = _prev(spark, state_dir, "regs", batch_id)
+        merged = _merge(
+            hll_register_frame(batch_df), prev, ["source", "reg"], F.max("r").alias("r")
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/regs/batch_id={batch_id}"
-        )
-        regs = spark.read.parquet(f"{state_dir}/regs/batch_id={batch_id}")
-        hll_estimate_frame(regs).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/estimate/batch_id={batch_id}"
-        )
+        regs = spark.read.parquet(_commit(merged, state_dir, "regs", batch_id))
+        _commit(hll_estimate_frame(regs), state_dir, "estimate", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E23: live latency-quantile monitor ------------------------------------
@@ -1637,34 +1647,21 @@ def hdr_quantile_pipeline(
     State layout: ``{state_dir}/counts/batch_id=N`` (merged counts
     AFTER batch N), ``{state_dir}/quantiles/batch_id=N`` (derived
     estimates). Replays re-merge the same batch into the same directory
-    — idempotent under at-least-once (the E19/E21/E22 shape)."""
+    — idempotent under at-least-once (the ``_commit`` replay contract)."""
     from ..operators.timeseries import hdr_bucket_counts_frame, hdr_quantiles_frame
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ev = batch_df.select("topic", F.col("payload_value").alias("v"))
-        batch_cnt = hdr_bucket_counts_frame(ev)
-        prev = _read_state_parquet(spark, f"{state_dir}/counts/batch_id={batch_id - 1}")
-        merged = (
-            batch_cnt if prev is None
-            else batch_cnt.unionByName(prev)
-            .groupBy("topic", "bucket")
-            .agg(F.sum("c").cast("bigint").alias("c"))
+        prev = _prev(spark, state_dir, "counts", batch_id)
+        merged = _merge(
+            hdr_bucket_counts_frame(ev), prev, ["topic", "bucket"],
+            F.sum("c").cast("bigint").alias("c"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/counts/batch_id={batch_id}"
-        )
-        cnt = spark.read.parquet(f"{state_dir}/counts/batch_id={batch_id}")
-        hdr_quantiles_frame(cnt).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/quantiles/batch_id={batch_id}"
-        )
+        cnt = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        _commit(hdr_quantiles_frame(cnt), state_dir, "quantiles", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E24: live funnel monitor ----------------------------------------------
@@ -1879,7 +1876,7 @@ def bm25_index_pipeline(
     State layout: ``{state_dir}/tf/batch_id=N`` and
     ``{state_dir}/dl/batch_id=N`` hold the accumulated index AFTER
     batch N; ``{state_dir}/topk/batch_id=N`` the ranking. Replays
-    rewrite their own directories (the E19-family idempotence shape).
+    rewrite their own directories (the ``_commit`` replay contract).
 
     SCALE: per trigger the batch contributes |batch| doc-length rows
     and only watch-term postings; df/N/avdl derive from the index
@@ -1893,24 +1890,15 @@ def bm25_index_pipeline(
         docs = batch_df.select("doc_id", "text")
         new_tf = bm25_tf_frame(docs)
         new_dl = bm25_doclen_frame(docs)
+        paths = []
         for kind, frame in (("tf", new_tf), ("dl", new_dl)):
-            prev = _read_state_parquet(spark, f"{state_dir}/{kind}/batch_id={batch_id - 1}")
+            prev = _prev(spark, state_dir, kind, batch_id)
             merged = frame if prev is None else frame.unionByName(prev)
-            merged.coalesce(1).write.mode("overwrite").parquet(
-                f"{state_dir}/{kind}/batch_id={batch_id}"
-            )
-        tf = spark.read.parquet(f"{state_dir}/tf/batch_id={batch_id}")
-        dl = spark.read.parquet(f"{state_dir}/dl/batch_id={batch_id}")
-        bm25_topk_from(tf, dl).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/topk/batch_id={batch_id}"
-        )
+            paths.append(_commit(merged, state_dir, kind, batch_id))
+        tf, dl = (spark.read.parquet(p) for p in paths)
+        _commit(bm25_topk_from(tf, dl), state_dir, "topk", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E26: live as-of join ---------------------------------------------------
@@ -2107,7 +2095,7 @@ def dsir_model_pipeline(
     target/candidate counts AFTER batch N), ``{state_dir}/ratio/
     batch_id=N`` (the model derived from them). Replays re-merge the
     same batch into the same directory — idempotent under
-    at-least-once (the E19/E21/E22 shape).
+    at-least-once (the ``_commit`` replay contract).
 
     SCALE: state is <= DSIR_BUCKETS rows forever; each trigger
     partial-aggs only its micro-batch and merges against that
@@ -2125,31 +2113,17 @@ def dsir_model_pipeline(
             "text",
             F.expr("CAST(substring(source, 4) AS INT) % 2").alias("side"),
         )
-        batch_cnt = dsir_counts_frame(dsir_token_buckets_frame(docs))
-        prev = _read_state_parquet(spark, f"{state_dir}/counts/batch_id={batch_id - 1}")
-        merged = (
-            batch_cnt if prev is None
-            else batch_cnt.unionByName(prev)
-            .groupBy("b")
-            .agg(
-                F.sum("ct").cast("bigint").alias("ct"),
-                F.sum("cr").cast("bigint").alias("cr"),
-            )
+        merged = _merge(
+            dsir_counts_frame(dsir_token_buckets_frame(docs)),
+            _prev(spark, state_dir, "counts", batch_id),
+            ["b"],
+            F.sum("ct").cast("bigint").alias("ct"),
+            F.sum("cr").cast("bigint").alias("cr"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/counts/batch_id={batch_id}"
-        )
-        cnt = spark.read.parquet(f"{state_dir}/counts/batch_id={batch_id}")
-        dsir_ratio_frame(cnt).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/ratio/batch_id={batch_id}"
-        )
+        cnt = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        _commit(dsir_ratio_frame(cnt), state_dir, "ratio", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E28: live perceptual-hash image dedup ---------------------------------
@@ -2191,15 +2165,10 @@ def phash_dedup_pipeline(
             batch_df.select("doc_id", F.encode("text", "utf-8").alias("payload"))
         )
         phash_match_frame(inc, g, bands).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
+            _path(out_dir, None, batch_id)
         )
 
-    return (
-        stream.writeStream.foreachBatch(decide_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, decide_batch, checkpoint_dir)
 
 
 # --- E29: live decontamination gate ----------------------------------------
@@ -2320,15 +2289,10 @@ def contamination_gate_pipeline(
             )
         )
         flagged.unionByName(clean).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
+            _path(out_dir, None, batch_id)
         )
 
-    return (
-        stream.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate_batch, checkpoint_dir)
 
 
 # --- E30: live system-load monitor ------------------------------------------
@@ -2350,6 +2314,7 @@ def system_load_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
     SCALE: per trigger the micro-batch aggregates map-side to O(jobs)
     rows and merges against O(jobs) state; the load derivation is
     O(topics) scalar math. Nothing ever re-reads the log."""
+    from ..operators.controller import system_load_from
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -2369,38 +2334,23 @@ def system_load_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
                 F.max("sec").alias("mx"),
             )
         )
-        prev = _read_state_parquet(spark, f"{state_dir}/jobs/batch_id={batch_id - 1}")
-        merged = (
-            batch_jobs if prev is None
-            else batch_jobs.unionByName(prev)
-            .groupBy("topic", "part_id")
-            .agg(
-                F.sum("n_msgs").cast("bigint").alias("n_msgs"),
-                F.sum("n_bytes").cast("bigint").alias("n_bytes"),
-                F.min("mn").alias("mn"),
-                F.max("mx").alias("mx"),
-            )
+        merged = _merge(
+            batch_jobs,
+            _prev(spark, state_dir, "jobs", batch_id),
+            ["topic", "part_id"],
+            F.sum("n_msgs").cast("bigint").alias("n_msgs"),
+            F.sum("n_bytes").cast("bigint").alias("n_bytes"),
+            F.min("mn").alias("mn"),
+            F.max("mx").alias("mx"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/jobs/batch_id={batch_id}"
-        )
-        from ..operators.controller import system_load_from
-
-        state = spark.read.parquet(f"{state_dir}/jobs/batch_id={batch_id}")
+        state = spark.read.parquet(_commit(merged, state_dir, "jobs", batch_id))
         span = state.agg((F.max("mx") - F.min("mn")).alias("span"))
         jobs = state.filter(F.col("n_msgs") > 0).select(
             "topic", "part_id", "n_msgs", "n_bytes"
         )
-        system_load_from(jobs, span).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/load/batch_id={batch_id}"
-        )
+        _commit(system_load_from(jobs, span), state_dir, "load", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E31: live ANN query serving --------------------------------------------
@@ -2438,16 +2388,9 @@ def ann_query_serving_pipeline(
 
     def serve(batch_df: DataFrame, batch_id: int) -> None:
         queries = batch_df.select("qid", "qv")
-        ivf_multiquery_topk(queries, corpus, reps).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
+        _commit(ivf_multiquery_topk(queries, corpus, reps), out_dir, None, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(query_stream, serve, checkpoint_dir)
 
 
 # --- E32: live incremental snapshot diff ------------------------------------
@@ -2495,28 +2438,16 @@ def snapshot_diff_pipeline(
         )
         touched = batch_df.select("doc_id").distinct()
         p_touched = prior_h.join(F.broadcast(touched), "doc_id")
-        batch_ledger = snapshot_diff_hashed(ups, p_touched)
-        prev = _read_state_parquet(spark, f"{state_dir}/ledger/batch_id={batch_id - 1}")
-        merged = (
-            batch_ledger
-            if prev is None
-            else batch_ledger.unionByName(prev)
-            .groupBy("source", "status")
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("bytes_delta").cast("bigint").alias("bytes_delta"),
-            )
+        merged = _merge(
+            snapshot_diff_hashed(ups, p_touched),
+            _prev(spark, state_dir, "ledger", batch_id),
+            ["source", "status"],
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("bytes_delta").cast("bigint").alias("bytes_delta"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/ledger/batch_id={batch_id}"
-        )
+        _commit(merged, state_dir, "ledger", batch_id)
 
-    return (
-        change_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(change_stream, fold, checkpoint_dir)
 
 
 # --- E33: live exact-substring ingest gate ----------------------------------
@@ -2549,16 +2480,9 @@ def substring_gate_pipeline(
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         t_in = es_token_frame(batch_df.select("doc_id", "text"))
-        incr_substring_frame(t_in, ex_h).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        _commit(incr_substring_frame(t_in, ex_h), out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate, checkpoint_dir)
 
 
 # --- E34: live kNN-graph ingest ---------------------------------------------
@@ -2591,16 +2515,9 @@ def knn_ingest_pipeline(
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         incoming = batch_df.select("vec_id", "v")
-        incr_knn_frame(incoming, ex_bands, ex).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
+        _commit(incr_knn_frame(incoming, ex_bands, ex), out_dir, None, batch_id)
 
-    return (
-        vec_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(vec_stream, ingest, checkpoint_dir)
 
 
 # --- E35: live quality-mixture monitor --------------------------------------
@@ -2635,28 +2552,17 @@ def quality_mixture_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: 
                 .alias("n_keep"),
             )
         )
-        prev = _read_state_parquet(spark, f"{state_dir}/mix/batch_id={batch_id - 1}")
-        merged = (
-            batch_mix
-            if prev is None
-            else batch_mix.unionByName(prev)
-            .groupBy("source", "quality_decile")
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-                F.sum("n_keep").cast("bigint").alias("n_keep"),
-            )
+        merged = _merge(
+            batch_mix,
+            _prev(spark, state_dir, "mix", batch_id),
+            ["source", "quality_decile"],
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+            F.sum("n_keep").cast("bigint").alias("n_keep"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/mix/batch_id={batch_id}"
-        )
+        _commit(merged, state_dir, "mix", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E36: live index-drift monitor ------------------------------------------
@@ -2696,31 +2602,17 @@ def index_drift_pipeline(
                 F.sum(F.expr("CAST(round(dist, 7) AS DECIMAL(20,7))")).alias("sum_d"),
             )
         )
-        prev = _read_state_parquet(spark, f"{state_dir}/cells/batch_id={batch_id - 1}")
-        merged = (
-            batch_cells
-            if prev is None
-            else batch_cells.unionByName(prev)
-            .groupBy("cluster")
-            .agg(
-                F.sum("n_members").cast("bigint").alias("n_members"),
-                F.sum("sum_d").cast("decimal(20,7)").alias("sum_d"),
-            )
+        merged = _merge(
+            batch_cells,
+            _prev(spark, state_dir, "cells", batch_id),
+            ["cluster"],
+            F.sum("n_members").cast("bigint").alias("n_members"),
+            F.sum("sum_d").cast("decimal(20,7)").alias("sum_d"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/cells/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/cells/batch_id={batch_id}")
-        drift_stats_from(state).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/drift/batch_id={batch_id}"
-        )
+        state = spark.read.parquet(_commit(merged, state_dir, "cells", batch_id))
+        _commit(drift_stats_from(state), state_dir, "drift", batch_id)
 
-    return (
-        vec_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(vec_stream, fold, checkpoint_dir)
 
 
 # --- E37: live span-level decontamination ------------------------------------
@@ -2763,16 +2655,9 @@ def decon_span_pipeline(
         candidates = batch_df.filter(~decon_eval_filter()).select(
             "doc_id", "source", "text"
         )
-        decon_span_frame(candidates, eval_grams).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch_id={batch_id}")
+        _commit(decon_span_frame(candidates, eval_grams), out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(rewrite)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, rewrite, checkpoint_dir)
 
 
 # --- E38: live KMV source-overlap sketches -----------------------------------
@@ -2801,28 +2686,14 @@ def kmv_sketch_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str):
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_sk = kmv_bottomk(kmv_hash_frame(batch_df.select("source", "text")))
-        prev = _read_state_parquet(
-            spark, f"{state_dir}/sketch/batch_id={batch_id - 1}"
-        )
+        prev = _prev(spark, state_dir, "sketch", batch_id)
         merged = kmv_bottomk(
-            batch_sk
-            if prev is None
-            else batch_sk.unionByName(prev).distinct()
+            batch_sk if prev is None else batch_sk.unionByName(prev).distinct()
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/sketch/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/sketch/batch_id={batch_id}")
-        kmv_pair_estimates(state).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/pairs/batch_id={batch_id}"
-        )
+        state = spark.read.parquet(_commit(merged, state_dir, "sketch", batch_id))
+        _commit(kmv_pair_estimates(state), state_dir, "pairs", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E39: live hybrid-RRF query serving --------------------------------------
@@ -2884,16 +2755,11 @@ def hybrid_serving_pipeline(
             "qid", F.explode("terms").alias("term")
         ).distinct()
         qvecs = batch_df.select("qid", "qv")
-        rrf_multiquery_frame(qterms, qvecs, tf, dl, corpus_vecs).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
+        _commit(
+            rrf_multiquery_frame(qterms, qvecs, tf, dl, corpus_vecs), out_dir, None, batch_id
+        )
 
-    return (
-        query_stream.writeStream.foreachBatch(serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(query_stream, serve, checkpoint_dir)
 
 
 # --- E40: live vocabulary-growth monitor -------------------------------------
@@ -2944,9 +2810,7 @@ def vocab_growth_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str
         batch_vocab = exploded.groupBy("source", "token").agg(
             F.min("doc_id").alias("fd")
         )
-        prev_vocab = _read_state_parquet(
-            spark, f"{state_dir}/vocab/batch_id={batch_id - 1}"
-        )
+        prev_vocab = _prev(spark, state_dir, "vocab", batch_id)
         new_first = (
             batch_vocab
             if prev_vocab is None
@@ -2955,9 +2819,7 @@ def vocab_growth_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str
         new_types = new_first.groupBy(
             "source", F.col("fd").alias("doc_id")
         ).agg(F.count("*").cast("bigint").alias("nt"))
-        prev_m = _read_state_parquet(
-            spark, f"{state_dir}/moments/batch_id={batch_id - 1}"
-        )
+        prev_m = _prev(spark, state_dir, "moments", batch_id)
         carry = (
             prev_m.select(
                 "source",
@@ -2990,48 +2852,31 @@ def vocab_growth_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str
                 + F.coalesce(F.col("base_v"), F.lit(0))
             ).alias("v"),
         ).filter((F.col("big_n") > 0) & (F.col("v") > 0))
-        batch_m = heaps_moments_frame(heaps_xy_frame(curve))
-        merged = (
-            batch_m
-            if prev_m is None
-            else batch_m.unionByName(prev_m)
-            .groupBy("source")
-            .agg(
-                F.sum("n_points").cast("bigint").alias("n_points"),
-                F.max("n_tokens").cast("bigint").alias("n_tokens"),
-                F.max("n_types").cast("bigint").alias("n_types"),
-                *[F.sum(c).alias(c) for c in _M_COLS],
-            )
-        )
-        merged = merged.select(
+        merged = _merge(
+            heaps_moments_frame(heaps_xy_frame(curve)),
+            prev_m,
+            ["source"],
+            F.sum("n_points").cast("bigint").alias("n_points"),
+            F.max("n_tokens").cast("bigint").alias("n_tokens"),
+            F.max("n_types").cast("bigint").alias("n_types"),
+            *[F.sum(c).alias(c) for c in _M_COLS],
+        ).select(
             "source",
             "n_points",
             "n_tokens",
             "n_types",
             *[F.col(c).cast("decimal(28,8)").alias(c) for c in _M_COLS],
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/moments/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/moments/batch_id={batch_id}")
-        heaps_fit_from(state).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/fit/batch_id={batch_id}"
-        )
+        state = spark.read.parquet(_commit(merged, state_dir, "moments", batch_id))
+        _commit(heaps_fit_from(state), state_dir, "fit", batch_id)
         new_vocab = batch_vocab.select("source", "token")
         if prev_vocab is not None:
             new_vocab = new_vocab.unionByName(
                 prev_vocab.select("source", "token")
             ).distinct()
-        new_vocab.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/vocab/batch_id={batch_id}"
-        )
+        _commit(new_vocab, state_dir, "vocab", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E41: live Zipf-drift monitor ---------------------------------------------
@@ -3048,7 +2893,7 @@ def zipf_drift_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str):
     drained fit equals batch D44 bit-for-bit under ANY chunking (no
     ordered-delivery requirement — unlike E40, nothing here depends on
     doc order). Replays re-derive batch N's state from batch_id=N-1
-    and overwrite — idempotent (the E19/E30 shape).
+    and overwrite — idempotent (the ``_commit`` replay contract).
 
     SCALE: per trigger the corpus-facing work is |batch| tokenization +
     one batch-vocab-bounded partial agg; the fold and the re-derive
@@ -3064,30 +2909,16 @@ def zipf_drift_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str):
             .groupBy("source", "token")
             .agg(F.count("*").cast("bigint").alias("c"))
         )
-        prev = _read_state_parquet(
-            spark, f"{state_dir}/counts/batch_id={batch_id - 1}"
+        merged = _merge(
+            batch_cnt,
+            _prev(spark, state_dir, "counts", batch_id),
+            ["source", "token"],
+            F.sum("c").cast("bigint").alias("c"),
         )
-        merged = (
-            batch_cnt
-            if prev is None
-            else batch_cnt.unionByName(prev)
-            .groupBy("source", "token")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/counts/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/counts/batch_id={batch_id}")
-        zipf_fit_from(state).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/fit/batch_id={batch_id}"
-        )
+        state = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        _commit(zipf_fit_from(state), state_dir, "fit", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E42: live perplexity gate -------------------------------------------------
@@ -3116,25 +2947,17 @@ def perplexity_gate_pipeline(
     corpus; nothing is pairwise."""
     from ..functions.text import bigram_lm_frames, bigram_score_frame
 
+    # uni and pc come back eagerly checkpointed; only the frames derived
+    # from them need materializing before the first trigger
     uni, pc, ctx, tot = bigram_lm_frames(corpus_docs.select("doc_id", "text"))
-    frames = [f.persist() for f in (uni, pc, ctx, tot)]
-    for f in frames:
-        f.count()  # materialize the serving index before the first trigger
-    uni, pc, ctx, tot = frames
+    ctx, tot = ctx.persist(), tot.persist()
+    ctx.count(), tot.count()
 
     def score(batch_df: DataFrame, batch_id: int) -> None:
-        bigram_score_frame(
-            batch_df.select("doc_id", "text"), uni, pc, ctx, tot
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        docs = batch_df.select("doc_id", "text")
+        _commit(bigram_score_frame(docs, uni, pc, ctx, tot), out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, score, checkpoint_dir)
 
 
 # --- E43: live PMI collocation monitor -----------------------------------------
@@ -3151,7 +2974,7 @@ def pmi_collocation_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: 
     (N and M come from the state tables themselves). Counts are exact
     integers, so the drained table equals batch D86 bit-for-bit under
     ANY chunking; replays re-derive batch N's state from batch_id=N-1
-    and overwrite — idempotent (the E19/E30 shape).
+    and overwrite — idempotent (the ``_commit`` replay contract).
 
     SCALE: per trigger the corpus-facing work is |batch| tokenization
     + two batch-vocab-bounded partial aggs; the fold and the re-derive
@@ -3163,45 +2986,20 @@ def pmi_collocation_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_uni, batch_pc = pmi_count_frames(batch_df)
-        prev_uni = _read_state_parquet(
-            spark, f"{state_dir}/uni/batch_id={batch_id - 1}"
+        prev_uni = _prev(spark, state_dir, "uni", batch_id)
+        prev_pc = _prev(spark, state_dir, "pc", batch_id)
+        uni = _merge(
+            batch_uni, prev_uni, ["token"], F.sum("freq").cast("bigint").alias("freq")
         )
-        prev_pc = _read_state_parquet(
-            spark, f"{state_dir}/pc/batch_id={batch_id - 1}"
+        pc = _merge(
+            batch_pc, prev_pc, ["tok_l", "tok_r"],
+            F.sum("pair_freq").cast("bigint").alias("pair_freq"),
         )
-        uni = (
-            batch_uni
-            if prev_uni is None
-            else batch_uni.unionByName(prev_uni)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("bigint").alias("freq"))
-        )
-        pc = (
-            batch_pc
-            if prev_pc is None
-            else batch_pc.unionByName(prev_pc)
-            .groupBy("tok_l", "tok_r")
-            .agg(F.sum("pair_freq").cast("bigint").alias("pair_freq"))
-        )
-        uni.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/uni/batch_id={batch_id}"
-        )
-        pc.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/pc/batch_id={batch_id}"
-        )
-        pmi_topk_from(
-            spark.read.parquet(f"{state_dir}/uni/batch_id={batch_id}"),
-            spark.read.parquet(f"{state_dir}/pc/batch_id={batch_id}"),
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/topk/batch_id={batch_id}"
-        )
+        uni = spark.read.parquet(_commit(uni, state_dir, "uni", batch_id))
+        pc = spark.read.parquet(_commit(pc, state_dir, "pc", batch_id))
+        _commit(pmi_topk_from(uni, pc), state_dir, "topk", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E44: live contrastive-triplet mining --------------------------------------
@@ -3245,18 +3043,11 @@ def triplet_mining_pipeline(
         # (the incremental_dedup convention)
         scored = _incr_scored_frame(incoming, ex_bands, ex).persist()
         try:
-            triplets_from_scored(scored).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(f"{out_dir}/batch_id={batch_id}")
+            _commit(triplets_from_scored(scored), out_dir, None, batch_id)
         finally:
             scored.unpersist()
 
-    return (
-        vec_stream.writeStream.foreachBatch(mine)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(vec_stream, mine, checkpoint_dir)
 
 
 # --- E45: live Markov-transition monitor ---------------------------------------
@@ -3284,7 +3075,7 @@ def markov_monitor_pipeline(
     count shifts every row total). Counts are exact integers, so the
     drained table equals batch D91 bit-for-bit under any contiguous
     time-ordered chunking; replays re-derive batch N's state from
-    batch_id=N-1 and overwrite — idempotent (the E19/E30 shape).
+    batch_id=N-1 and overwrite — idempotent (the ``_commit`` replay contract).
 
     ORDERED-DELIVERY CONTRACT (enforced, not assumed): the carry
     mechanism is sound only if each user's events arrive in
@@ -3318,12 +3109,8 @@ def markov_monitor_pipeline(
         ev = batch_df.select("user_id", "ts", "event_id", "event_type")
         if reorder_watermark_s is not None:
             ev = reorder_gate(ev, state_dir, batch_id, reorder_watermark_s)
-        prev_carry = _read_state_parquet(
-            spark, f"{state_dir}/carry/batch_id={batch_id - 1}"
-        )
-        prev_counts = _read_state_parquet(
-            spark, f"{state_dir}/counts/batch_id={batch_id - 1}"
-        )
+        prev_carry = _prev(spark, state_dir, "carry", batch_id)
+        prev_counts = _prev(spark, state_dir, "counts", batch_id)
         if prev_carry is not None:
             # ordered-delivery guard: a batch event sorting before its
             # user's carried last-seen key violates the per-user order
@@ -3370,12 +3157,9 @@ def markov_monitor_pipeline(
             .groupBy("event_from", "event_to")
             .agg(F.count("*").cast("bigint").alias("n_trans"))
         )
-        counts = (
-            batch_cnt
-            if prev_counts is None
-            else batch_cnt.unionByName(prev_counts)
-            .groupBy("event_from", "event_to")
-            .agg(F.sum("n_trans").cast("bigint").alias("n_trans"))
+        counts = _merge(
+            batch_cnt, prev_counts, ["event_from", "event_to"],
+            F.sum("n_trans").cast("bigint").alias("n_trans"),
         )
         w_last = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
@@ -3385,24 +3169,12 @@ def markov_monitor_pipeline(
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        counts.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/counts/batch_id={batch_id}"
-        )
-        carry.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/carry/batch_id={batch_id}"
-        )
-        markov_table_from(
-            spark.read.parquet(f"{state_dir}/counts/batch_id={batch_id}")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/table/batch_id={batch_id}"
-        )
+        counts_path = _commit(counts, state_dir, "counts", batch_id)
+        _commit(carry, state_dir, "carry", batch_id)
+        table = markov_table_from(spark.read.parquet(counts_path))
+        _commit(table, state_dir, "table", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E46: live CUSUM rate-anomaly monitor --------------------------------------
@@ -3426,7 +3198,7 @@ def cusum_monitor_pipeline(
     is prefix-stable, so the drained table equals batch D92 restricted
     to the same completed prefix, bit-for-bit, under ANY time-ordered
     chunking; replays re-derive batch N's state from batch_id=N-1 and
-    overwrite — idempotent (the E19/E30 shape). Event types ABSENT
+    overwrite — idempotent (the ``_commit`` replay contract). Event types ABSENT
     from the reference window cannot be standardized and are surfaced
     per trigger in an `untracked/` output (type, minutes, events) —
     never silently dropped — so the operator knows to re-calibrate.
@@ -3471,54 +3243,37 @@ def cusum_monitor_pipeline(
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        bm = cusum_minute_counts(batch_df.select("event_type", "ts"))
-        prev = _read_state_parquet(
-            spark, f"{state_dir}/minutes/batch_id={batch_id - 1}"
+        merged = _merge(
+            cusum_minute_counts(batch_df.select("event_type", "ts")),
+            _prev(spark, state_dir, "minutes", batch_id),
+            ["event_type", "m"],
+            F.sum("c").cast("bigint").alias("c"),
         )
-        merged = (
-            bm
-            if prev is None
-            else bm.unionByName(prev)
-            .groupBy("event_type", "m")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/minutes/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/minutes/batch_id={batch_id}")
+        state = spark.read.parquet(_commit(merged, state_dir, "minutes", batch_id))
         wmax = Window.partitionBy("event_type")
         completed = (
             state.withColumn("mx", F.max("m").over(wmax))
             .filter(F.col("m") < F.col("mx"))
             .drop("mx")
         )
-        cusum_fold_from(completed, stats).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/table/batch_id={batch_id}")
+        _commit(cusum_fold_from(completed, stats), state_dir, "table", batch_id)
         # A type with NO reference moments cannot be standardized — the
         # fold's stats join would silently drop it, and a brand-new
         # event type flooding mid-stream is exactly the anomaly class a
         # rate monitor must not swallow. Surface such types explicitly
         # so the operator re-calibrates (a D72-style stats refresh)
         # instead of flying blind.
-        (
+        untracked = (
             state.join(stats.select("event_type"), "event_type", "left_anti")
             .groupBy("event_type")
             .agg(
                 F.count("*").cast("bigint").alias("n_minutes_seen"),
                 F.sum("c").cast("bigint").alias("n_events_seen"),
             )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/untracked/batch_id={batch_id}")
         )
+        _commit(untracked, state_dir, "untracked", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E47: live DoReMi mixture monitor -------------------------------------------
@@ -3541,7 +3296,7 @@ def mixture_reweight_pipeline(
     ``doremi_weights_from`` kernel. DECIMAL addition is exact, so the
     drained mixture equals batch D93 bit-for-bit under ANY chunking;
     replays re-derive batch N's state from batch_id=N-1 and overwrite —
-    idempotent (the E19/E30 shape).
+    idempotent (the ``_commit`` replay contract).
 
     SCALE: per trigger the corpus-facing work is |batch| tokenization
     + the token-key join against the persisted vocab frame + one
@@ -3554,48 +3309,28 @@ def mixture_reweight_pipeline(
         unigram_loss_frames,
     )
 
+    # uni comes back eagerly checkpointed; freeze the derived totals
+    # before the first trigger
     uni, tot = unigram_loss_frames(corpus_docs.select("source", "text"))
-    frames = [f.persist() for f in (uni, tot)]
-    for f in frames:
-        f.count()  # freeze the scoring LM before the first trigger
-    uni, tot = frames
+    tot = tot.persist()
+    tot.count()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_loss = source_loss_frame(
-            batch_df.select("source", "text"), uni, tot
+        merged = _merge(
+            source_loss_frame(batch_df.select("source", "text"), uni, tot),
+            _prev(spark, state_dir, "loss", batch_id),
+            ["source"],
+            F.sum("n_tok").cast("bigint").alias("n_tok"),
+            # decimal(28,8) = Spark's natural sum type for the
+            # (18,8) per-token terms; wide enough for 100 TB-scale
+            # corpus-lifetime sums (10^20 integer digits headroom)
+            F.sum("sum_nll").cast("decimal(28,8)").alias("sum_nll"),
         )
-        prev = _read_state_parquet(
-            spark, f"{state_dir}/loss/batch_id={batch_id - 1}"
-        )
-        merged = (
-            batch_loss
-            if prev is None
-            else batch_loss.unionByName(prev)
-            .groupBy("source")
-            .agg(
-                F.sum("n_tok").cast("bigint").alias("n_tok"),
-                # decimal(28,8) = Spark's natural sum type for the
-                # (18,8) per-token terms; wide enough for 100 TB-scale
-                # corpus-lifetime sums (10^20 integer digits headroom)
-                F.sum("sum_nll").cast("decimal(28,8)").alias("sum_nll"),
-            )
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/loss/batch_id={batch_id}"
-        )
-        doremi_weights_from(
-            spark.read.parquet(f"{state_dir}/loss/batch_id={batch_id}")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/weights/batch_id={batch_id}"
-        )
+        loss = spark.read.parquet(_commit(merged, state_dir, "loss", batch_id))
+        _commit(doremi_weights_from(loss), state_dir, "weights", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 # --- E48: live split-leakage admission gate -------------------------------------
@@ -3648,7 +3383,7 @@ def split_leakage_gate_pipeline(
         in_sh3 = incr_shingle_frame(in_docs).persist()
         try:
             matched = incremental_dedup_frame(in_sh3, ex_bands, ex_sh3)
-            (
+            verdicts = (
                 matched.join(
                     in_docs.select("doc_id", split_expr.alias("split")), "doc_id"
                 )
@@ -3664,19 +3399,12 @@ def split_leakage_gate_pipeline(
                     .otherwise("cross_split_leak")
                     .alias("verdict"),
                 )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(f"{out_dir}/batch_id={batch_id}")
             )
+            _commit(verdicts, out_dir, None, batch_id)
         finally:
             in_sh3.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate, checkpoint_dir)
 
 
 # --- E49: live audio segmentation ----------------------------------------------
@@ -3703,16 +3431,9 @@ def audio_segment_pipeline(stream: DataFrame, out_dir: str, checkpoint_dir: str)
         bins = batch_df.select(
             "doc_id", F.encode("text", "utf-8").alias("payload")
         )
-        audio_segments_frame(bins).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        _commit(audio_segments_frame(bins), out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(segment)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, segment, checkpoint_dir)
 
 
 # --- E50: live tokenizer-fertility monitor -----------------------------------
@@ -3743,6 +3464,7 @@ def _fertility_monitor_pipeline(
     vocab-table join inside attach_nsyms + an O(sources) partial agg
     merged against O(sources) state. Nothing ever re-reads the
     corpus."""
+    sum_cols = ["n_docs", "ws_tokens", token_field, "n_chars"]
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         from ..functions.tokenize import TOKENS_SPARK
@@ -3757,24 +3479,14 @@ def _fertility_monitor_pipeline(
             F.sum("n_syms").cast("bigint").alias(token_field),
             F.sum(F.length("word")).cast("bigint").alias("n_chars"),
         )
-        prev = _read_state_parquet(spark, f"{state_dir}/fert/batch_id={batch_id - 1}")
-        merged = (
-            batch_sums
-            if prev is None
-            else batch_sums.unionByName(prev)
-            .groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("ws_tokens").cast("bigint").alias("ws_tokens"),
-                F.sum(token_field).cast("bigint").alias(token_field),
-                F.sum("n_chars").cast("bigint").alias("n_chars"),
-            )
+        merged = _merge(
+            batch_sums,
+            _prev(spark, state_dir, "fert", batch_id),
+            ["source"],
+            *[F.sum(c).cast("bigint").alias(c) for c in sum_cols],
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/fert/batch_id={batch_id}"
-        )
-        state = spark.read.parquet(f"{state_dir}/fert/batch_id={batch_id}")
-        state.select(
+        state = spark.read.parquet(_commit(merged, state_dir, "fert", batch_id))
+        ratios = state.select(
             "source",
             "n_docs",
             "ws_tokens",
@@ -3786,16 +3498,10 @@ def _fertility_monitor_pipeline(
             F.round(
                 F.col("n_chars").cast("double") / F.col(token_field), 6
             ).alias("chars_per_token"),
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/ratios/batch_id={batch_id}"
         )
+        _commit(ratios, state_dir, "ratios", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, fold, checkpoint_dir)
 
 
 def _frozen_seg_attach(seg: DataFrame):
@@ -3993,46 +3699,17 @@ def domain_caps_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
         domain_url_groups,
     )
 
-    def _read_url_pages(spark, upto: int):
-        """Union of the append-only ledger pages with batch_id <= upto
-        — a crashed batch's own leftover page is excluded, so replays
-        re-derive from exactly the pre-batch ledger.
-
-        Only the genuinely-no-pages case returns None: a page dir with
-        no part files is a crashed write's empty leftover (the rename
-        into place never happened) and is skipped, but a dir WITH part
-        files that fails to read (truncated footer, FS corruption) must
-        PROPAGATE — a bare except here would silently empty the whole
-        URL ledger, re-admitting every previously-seen URL and
-        double-counting the per-domain counters with no error surfaced
-        (ADVICE r10). Failing the trigger so it retries is strictly
-        safer than silently dropping dedup history."""
-        import glob as _glob
-
-        dirs = [
-            p
-            for p in _glob.glob(f"{state_dir}/urls/batch_id=*")
-            if p.rsplit("=", 1)[-1].isdigit()
-            and int(p.rsplit("=", 1)[-1]) <= upto
-            and _glob.glob(f"{p}/part-*")
-        ]
-        if not dirs:
-            return None
-        return spark.read.parquet(*dirs)
-
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         d = domain_url_frame(batch_df.select("doc_id", "source", "text"))
         batch_urls = domain_url_groups(d)
-        prev_urls = _read_url_pages(spark, batch_id - 1)
+        prev_urls = _read_pages(spark, state_dir, "urls", batch_id - 1)
         new_urls = (
             batch_urls
             if prev_urls is None
             else batch_urls.join(prev_urls.select("url"), "url", "left_anti")
         )
-        prev_dom = _read_state_parquet(
-            spark, f"{state_dir}/domains/batch_id={batch_id - 1}"
-        )
+        prev_dom = _prev(spark, state_dir, "domains", batch_id)
         ranked = new_urls.withColumn(
             "rk",
             F.row_number().over(Window.partitionBy("domain").orderBy("rep_id")),
@@ -4059,16 +3736,13 @@ def domain_caps_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
         #    re-fetch must not re-rank). Append-only: the full ledger
         #    is the union of pages, never rewritten.
         url_cols = ["source", "domain", "url", "rep_id"]
-        adm.select(*url_cols).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/urls/batch_id={batch_id}"
-        )
+        _commit(adm.select(*url_cols), state_dir, "urls", batch_id)
 
         # 2. admitted rows of THIS batch (the gate's output)
-        adm.filter("admitted").select(
+        admitted = adm.filter("admitted").select(
             F.col("rep_id").alias("doc_id"), "source", "domain", "url"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/admitted/batch_id={batch_id}"
         )
+        _commit(admitted, state_dir, "admitted", batch_id)
 
         # 3. per-domain counters: additive deltas merged onto the
         #    previous table; n_url_dups re-derives (n_docs - n_urls)
@@ -4109,7 +3783,7 @@ def domain_caps_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
             F.sum("n_overflow").cast("bigint").alias("n_overflow"),
             F.min("first_doc_id").alias("first_doc_id"),
         )
-        merged.select(
+        domains = merged.select(
             "source",
             "domain",
             "n_docs",
@@ -4118,16 +3792,10 @@ def domain_caps_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
             "n_kept",
             "n_overflow",
             "first_doc_id",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/domains/batch_id={batch_id}"
         )
+        _commit(domains, state_dir, "domains", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E54: live multi-epoch budget monitor -----------------------------------
@@ -4157,47 +3825,13 @@ def multi_epoch_monitor_pipeline(
 
     Reference analogue: none (training-data pipeline family; published
     rule per Muennighoff et al. 2023 — PAPERS.md)."""
-    from ..functions.tokenize import TOKENS_SPARK
     from ..operators.training import multi_epoch_frame
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_tot = (
-            batch_df.select(
-                "source",
-                F.expr(f"CAST(size({TOKENS_SPARK}) AS BIGINT)").alias("n_tok"),
-            )
-            .groupBy("source")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tok").cast("bigint").alias("n_tokens"),
-            )
-        )
-        prev = _read_state_parquet(spark, f"{state_dir}/totals/batch_id={batch_id - 1}")
-        merged = (
-            batch_tot
-            if prev is None
-            else batch_tot.unionByName(prev)
-            .groupBy("source")
-            .agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-        )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/totals/batch_id={batch_id}"
-        )
-        totals = spark.read.parquet(f"{state_dir}/totals/batch_id={batch_id}")
-        multi_epoch_frame(totals).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/epochs/batch_id={batch_id}"
-        )
+        totals = _fold_source_totals(batch_df, state_dir, batch_id)
+        _commit(multi_epoch_frame(totals), state_dir, "epochs", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(update)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, update, checkpoint_dir)
 
 
 # --- E55: live sentence-span ingest gate -------------------------------------
@@ -4237,16 +3871,9 @@ def sentence_gate_pipeline(
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         t_in = sent_frame(batch_df.select("doc_id", "text"))
-        incr_sent_span_frame(t_in, ex_h).coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        _commit(incr_sent_span_frame(t_in, ex_h), out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate, checkpoint_dir)
 
 
 # --- E56: live paragraph ingest gate -----------------------------------------
@@ -4302,16 +3929,9 @@ def paragraph_gate_pipeline(
         out = incr_sent_span_frame(t_in, ex_h, s=1).select(
             "doc_id", *[F.col(a).alias(b) for a, b in _PARA_COLS]
         )
-        out.coalesce(1).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
+        _commit(out, out_dir, None, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate, checkpoint_dir)
 
 
 # --- E57: composed live curation gate ----------------------------------------
@@ -4368,8 +3988,6 @@ def curation_gate_pipeline(
     Reference analogue: none — training-data curation family (SURVEY
     §2 E; the C4/RefinedWeb/Llama-2 composed recipe, live at-ingest
     form)."""
-    import glob as _glob
-
     from ..functions.tokenize import TOKENS_SPARK
     from ..operators.dedup import decon_grams_frame, sent_frame, sent_window_frame
     from ..operators.funnel import _kept_units, decon_tier_stage, exact_norm_hash
@@ -4389,22 +4007,6 @@ def curation_gate_pipeline(
     # materialize all three reference sets before the first trigger
     corpus_h.count(), ex_h.count(), eval_grams.count()
 
-    def _read_hash_pages(spark, upto: int):
-        """Union of ledger pages with batch_id <= upto — a crashed
-        batch's empty leftover dir is skipped, but a page WITH part
-        files that fails to read must propagate (the E53/ADVICE r10
-        rule: silently emptying the ledger re-admits every seen doc)."""
-        dirs = [
-            p
-            for p in _glob.glob(f"{state_dir}/hashes/batch_id=*")
-            if p.rsplit("=", 1)[-1].isdigit()
-            and int(p.rsplit("=", 1)[-1]) <= upto
-            and _glob.glob(f"{p}/part-*")
-        ]
-        if not dirs:
-            return None
-        return spark.read.parquet(*dirs)
-
     _tok_n = F.expr(f"CAST(size({TOKENS_SPARK}) AS BIGINT)")
 
     def _acct(frame: DataFrame, stage: str):
@@ -4419,7 +4021,7 @@ def curation_gate_pipeline(
         b = batch_df.select(
             "doc_id", "text", exact_norm_hash().alias("h")
         ).localCheckpoint()
-        prev = _read_hash_pages(spark, batch_id - 1)
+        prev = _read_pages(spark, state_dir, "hashes", batch_id - 1)
 
         # 1. exact gate: within-batch keep-min, then corpus + ledger
         keep = b.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
@@ -4436,9 +4038,7 @@ def curation_gate_pipeline(
         new_h = keep.select("h").join(corpus_h, "h", "left_anti")
         if prev is not None:
             new_h = new_h.join(prev.select("h"), "h", "left_anti")
-        new_h.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/hashes/batch_id={batch_id}"
-        )
+        _commit(new_h, state_dir, "hashes", batch_id)
 
         # 2. span gate (E55 grade) with the funnel's materializing cut
         after_exact = cur.select("doc_id", "text")
@@ -4465,28 +4065,18 @@ def curation_gate_pipeline(
         # tier on one detection head)
         admitted = decon_tier_stage(after_span, eval_grams).localCheckpoint()
 
-        admitted.coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/admitted/batch_id={batch_id}"
-        )
+        _commit(admitted, state_dir, "admitted", batch_id)
         acct = [
             _acct(batch_df.select("doc_id", "text"), "input"),
             _acct(after_exact, "exact_gate"),
             _acct(after_span, "span_gate"),
             _acct(admitted, "decon_gate"),
         ]
-        spark.createDataFrame(
-            [
-                (batch_id, a["stage"], i, a["docs"], a["tokens"])
-                for i, a in enumerate(acct)
-            ],
-            "batch_id long, stage string, stage_idx long, docs long, tokens long",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{state_dir}/accounting/batch_id={batch_id}"
-        )
+        rows = [
+            (batch_id, a["stage"], i, a["docs"], a["tokens"])
+            for i, a in enumerate(acct)
+        ]
+        schema = "batch_id long, stage string, stage_idx long, docs long, tokens long"
+        _commit(spark.createDataFrame(rows, schema), state_dir, "accounting", batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(stream, gate, checkpoint_dir)
