@@ -216,3 +216,20 @@ def test_streaming_state_goes_through_the_versioned_helpers():
         "coalesce(1).write",
     ):
         assert banned not in rest, f"{banned!r} outside the state helpers"
+
+
+def test_constant_tables_go_through_local_table():
+    """The package builds small constant tables only with
+    ``model.local_table`` (an in-plan LocalRelation): createDataFrame over
+    a Python list parallelizes it, one job of defaultParallelism Python
+    tasks per action over a handful of rows."""
+    import pathlib
+
+    root = pathlib.Path(uforwarder_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert not hits, hits

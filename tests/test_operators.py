@@ -8,8 +8,12 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
+from uforwarder_spark.model import local_table
+from uforwarder_spark.operators import controller as C
+from uforwarder_spark.operators import pipeline as P
 from uforwarder_spark.operators.controller import rendezvous_assign
 from uforwarder_spark.operators.pipeline import (
     ack_watermark_frame,
@@ -1317,3 +1321,46 @@ def test_scale_window_samples_are_double_like_the_oracle(spark, tmp_path):
             assert_parity(got, con.execute(ORACLES[key]).fetchdf(), key)
     finally:
         con.close()
+
+
+# --- constant tables ---------------------------------------------------------
+def _typed_rows(df):
+    return (
+        [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+        sorted(df.collect(), key=repr),
+    )
+
+
+@pytest.mark.parametrize(
+    "rows,names,build",
+    [
+        pytest.param(P.ROUTES, ["topic", "callee_uri"], P._routes_df, id="routes"),
+        pytest.param(P.DELAYS, ["topic", "delay_ms"], P._delays_df, id="delays"),
+        pytest.param(C.QUOTAS, ["topic", "quota_mps"], C._quotas_df, id="quotas"),
+        pytest.param([(w,) for w in C.WORKERS], ["worker"], C._workers_df, id="workers"),
+        pytest.param(
+            [(w,) for w in C.WORKERS_EPOCH2],
+            ["worker"],
+            lambda spark: C._workers_df(spark, C.WORKERS_EPOCH2),
+            id="workers_epoch2",
+        ),
+    ],
+)
+def test_constant_table_types_and_rows_match_create_data_frame(spark, rows, names, build):
+    """Each in-plan constant table has the column types and rows that
+    createDataFrame infers for the same Python list: int stays BIGINT
+    (not INT), float stays DOUBLE (not the DECIMAL of a SQL literal)."""
+    assert _typed_rows(build(spark)) == _typed_rows(spark.createDataFrame(rows, names))
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [[(0, "input", 3, None), (0, "gate", None, 7)], []],
+    ids=["with_nulls", "empty"],
+)
+def test_local_table_with_ddl_schema_matches_create_data_frame(spark, rows):
+    # the shape of the per-trigger accounting rows and the BPE merge table
+    ddl = "batch_id long, stage string, stage_idx int, docs bigint"
+    assert _typed_rows(local_table(spark, rows, ddl)) == _typed_rows(
+        spark.createDataFrame(rows, ddl)
+    )

@@ -162,6 +162,19 @@ def test_delay_process_shuffles_once(spark):
     assert "BroadcastHashJoin" in plan  # O(topics) delay config never shuffles
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["worker_pipeline_summary", "partition_assignment", "worker_lease_reassignment", "delay_process"],
+)
+def test_constant_tables_are_local_relations(spark, name):
+    # routes, workers and delays live in the plan (LocalTableScan); an
+    # RDD-backed table (Scan ExistingRDD) costs defaultParallelism Python
+    # tasks on every action that reads it, its broadcast included
+    plan = plan_of(spark, name)
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
 def test_dlq_dispatch_tokens_shuffles_once(spark):
     # A25: the range window partitions by (topic, part_id) and the
     # summary groupBy uses the same keys — one hash exchange total

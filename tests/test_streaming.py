@@ -152,9 +152,9 @@ def test_e4_streaming_dedup(spark, tmp_path):
 
 
 def test_e5_stream_static_routing_join(spark, msg_log_dir, tmp_path):
-    from uforwarder_spark.operators.pipeline import ROUTES
+    from uforwarder_spark.operators.pipeline import _routes_df
 
-    routes = spark.createDataFrame(ROUTES, ["topic", "callee_uri"])
+    routes = _routes_df(spark)
     stream = P.message_stream(spark, msg_log_dir)
     q = _run_to_memory(
         P.route_stream_dynamic(stream, routes), "e5_routes", str(tmp_path / "ckpt"), "append"
@@ -454,9 +454,9 @@ def test_e10_streaming_consumer_lag_matches_batch(spark, tmp_path):
 def test_e11_autoscale_signal_matches_batch_windows(spark, msg_log_dir, tmp_path):
     """E11: every closed window's verdict equals the batch computation
     of the same window-vs-quota rule (B3's thresholds)."""
-    from uforwarder_spark.operators.controller import QUOTAS
+    from uforwarder_spark.operators.controller import QUOTAS, _quotas_df
 
-    quotas = spark.createDataFrame(QUOTAS, ["topic", "quota_mps"])
+    quotas = _quotas_df(spark)
     stream = P.message_stream(spark, msg_log_dir)
     q = _run_to_memory(
         P.autoscale_signal_stream(stream, quotas),

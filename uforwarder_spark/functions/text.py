@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..model import load_parallel
+from ..model import load_parallel, local_table
 from ..registry import register
 from .quantiles import counts_quantiles_sql
 from .tokenize import (  # noqa: F401  (re-exported for compat)
@@ -3357,7 +3357,7 @@ def _merge_train_frames(words: DataFrame, steps: int, pick_best, emit_row, out_s
             "freq",
             _merge_fold_col(best[0]["l"], best[0]["r"]).alias("sym_str"),
         ).localCheckpoint()
-    return words.sparkSession.createDataFrame(merges_rows, out_schema), cur
+    return local_table(words.sparkSession, merges_rows, out_schema), cur
 
 
 def bpe_train_frames(words: DataFrame):

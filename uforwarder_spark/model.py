@@ -33,8 +33,53 @@ scan. No shuffle happens here, and no Python UDFs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 N_PARTITIONS = 8
+
+# The types spark.createDataFrame infers for plain Python values.
+_PY_SQL_TYPES = {int: "BIGINT", float: "DOUBLE", str: "STRING"}
+
+
+def _inferred_type(name: str, values: list) -> str:
+    kinds = {type(v) for v in values if v is not None}
+    if len(kinds) != 1 or next(iter(kinds)) not in _PY_SQL_TYPES:
+        raise TypeError(f"column {name!r}: cannot infer one SQL type from {kinds or 'no values'}")
+    return _PY_SQL_TYPES[kinds.pop()]
+
+
+def local_table(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A small constant table (routes, workers, quotas, delays, per-trigger
+    accounting rows) as an in-plan ``LocalRelation``.
+
+    ``schema`` is either a list of column names, typed the way
+    createDataFrame types plain Python values (int → BIGINT, never INT;
+    float → DOUBLE, never the DECIMAL a SQL literal like ``0.10`` gets;
+    str → STRING), or a DDL string such as
+    ``"batch_id long, stage string"``.
+
+    SCALE: createDataFrame over a Python list runs ``sc.parallelize``:
+    the plan holds an RDD of pickled rows, and every action over it, a
+    broadcast included, runs ``defaultParallelism`` Python tasks (one
+    per executor core on a cluster, each with a Python worker) to ship a
+    handful of rows. A ``VALUES`` table plans as ``LocalTableScan``: the
+    rows are in the plan, nothing crosses into Python, and broadcasting
+    it runs at most one JVM task per row. Values bind as named
+    parameters, so quoting and NULL need no escaping here."""
+    if isinstance(schema, str):
+        cols = [(f.name, f.dataType.simpleString()) for f in StructType.fromDDL(schema)]
+    else:
+        cols = [(n, _inferred_type(n, [r[j] for r in rows])) for j, n in enumerate(schema)]
+    args = {f"p{i}_{j}": v for i, row in enumerate(rows) for j, v in enumerate(row)}
+    cells = [[f"CAST(:p{i}_{j} AS {t})" for j, (_, t) in enumerate(cols)] for i in range(len(rows))]
+    # VALUES needs a row: an empty table is one typed NULL row filtered out.
+    values = ", ".join(
+        "(" + ", ".join(r) + ")" for r in cells or [[f"CAST(NULL AS {t})" for _, t in cols]]
+    )
+    names = ", ".join(f"`{n}`" for n, _ in cols)
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names}){where}", args=args)
+
 
 # 60-bit integer hash of a string expression, identical cross-engine
 # (Spark conv() vs DuckDB hex cast) — the repo's standard trick for

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..model import MESSAGES_SQL_BODY, N_PARTITIONS, messages
+from ..model import MESSAGES_SQL_BODY, N_PARTITIONS, local_table, messages
 from ..registry import register
 
 MSG_CTE = f"WITH messages AS ({MESSAGES_SQL_BODY})"
@@ -27,8 +27,12 @@ QUOTAS_SQL = (
 )
 
 
-def _workers_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(w,) for w in WORKERS], ["worker"])
+def _workers_df(spark: SparkSession, workers: list[str] = WORKERS) -> DataFrame:
+    return local_table(spark, [(w,) for w in workers], ["worker"])
+
+
+def _quotas_df(spark: SparkSession) -> DataFrame:
+    return local_table(spark, QUOTAS, ["topic", "quota_mps"])
 
 
 def _jobs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -181,7 +185,7 @@ def autoscale_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal = windows.groupBy("topic").agg(
         F.max("mps").alias("peak_mps"), F.avg("mps").alias("avg_mps")
     )
-    quotas = spark.createDataFrame(QUOTAS, ["topic", "quota_mps"])
+    quotas = _quotas_df(spark)
     decision = (
         F.when(F.col("peak_mps") > F.col("quota_mps") * 1.2, "scale_up")
         .when(F.col("peak_mps") < F.col("quota_mps") * 0.5, "scale_down")
@@ -417,7 +421,7 @@ def autoscale_hysteresis(spark: SparkSession, sf_dir: str) -> DataFrame:
     work is only the first (topic, window) partial agg; everything after
     operates on thousands of rows."""
     m = messages(spark, sf_dir)
-    quotas = spark.createDataFrame(QUOTAS, ["topic", "quota_mps"])
+    quotas = _quotas_df(spark)
     window_epoch = F.expr("CAST(unix_timestamp(ts) DIV 300 AS BIGINT) * 300")
     windows = (
         m.withColumn("window_epoch", window_epoch)
@@ -705,9 +709,9 @@ def job_commands(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual = rendezvous_assign(jobs, _workers_df(spark)).withColumnRenamed(
         "assigned_worker", "actual_worker"
     )
-    expected = rendezvous_assign(
-        jobs, spark.createDataFrame([(w,) for w in WORKERS_EPOCH2], ["worker"])
-    ).withColumnRenamed("assigned_worker", "expected_worker")
+    expected = rendezvous_assign(jobs, _workers_df(spark, WORKERS_EPOCH2)).withColumnRenamed(
+        "assigned_worker", "expected_worker"
+    )
     exp_state = F.expr(
         f"CASE WHEN {H_SPARK.format(col=_JOB_KEY_SPARK.format(salt='exp'))} % 10 = 0 "
         "THEN 'CANCELED' ELSE 'RUNNING' END"
@@ -904,7 +908,7 @@ def autoscale_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.max("x").alias("x_max"),
     )
-    quotas = spark.createDataFrame(QUOTAS, ["topic", "quota_mps"])
+    quotas = _quotas_df(spark)
     slope = F.expr(
         "CAST(n_windows * sxy - sx * sy AS DOUBLE) / (n_windows * sxx - sx * sx)"
     )
@@ -1332,7 +1336,7 @@ def flow_control_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny agg; the message log is touched only for the job universe."""
     m = messages(spark, sf_dir)
     jobs = m.select("topic", "part_id").distinct()
-    quotas = spark.createDataFrame(QUOTAS, ["topic", "quota_mps"])
+    quotas = _quotas_df(spark)
     job_quota = jobs.join(F.broadcast(quotas), "topic").select(
         "topic",
         "part_id",

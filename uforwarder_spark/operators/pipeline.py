@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.quantiles import counts_quantiles, counts_quantiles_sql
-from ..model import MESSAGES_SQL_BODY, messages
+from ..model import MESSAGES_SQL_BODY, local_table, messages
 from ..registry import register
 
 # Shared CTE so every oracle computes the identical message projection.
@@ -40,7 +40,7 @@ ROUTES_SQL = "(VALUES " + ", ".join(f"('{t}', '{u}')" for t, u in ROUTES) + ") A
 
 
 def _routes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROUTES, ["topic", "callee_uri"])
+    return local_table(spark, ROUTES, ["topic", "callee_uri"])
 
 
 # --- A1 ------------------------------------------------------------------
@@ -1215,6 +1215,12 @@ DELAYS = [
     ("error", 259_200_000),      # 72 h
 ]
 DELAYS_SQL = "(VALUES " + ", ".join(f"('{t}', {d})" for t, d in DELAYS) + ") AS d(topic, delay_ms)"
+
+
+def _delays_df(spark: SparkSession) -> DataFrame:
+    return local_table(spark, DELAYS, ["topic", "delay_ms"])
+
+
 # The fetcher's poll instant, fixed so the operator is deterministic.
 DELAY_NOW = "2024-01-12 00:00:00"
 
@@ -1269,7 +1275,7 @@ def delay_process(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange, so the message log shuffles once. The ts <= now
     predicate pushes to the scan (prunes future date partitions
     outright at 100 TB)."""
-    delays = spark.createDataFrame(DELAYS, ["topic", "delay_ms"])
+    delays = _delays_df(spark)
     now = F.lit(DELAY_NOW).cast("timestamp")
     polled = (
         messages(spark, sf_dir)

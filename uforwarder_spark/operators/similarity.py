@@ -2003,7 +2003,7 @@ def _pr_iter_duck(i: int) -> str:
   FROM edges g JOIN pr{i - 1} p ON p.vec_id = g.src
   GROUP BY g.dst
 ),
-pr{i} AS (
+pr{i} AS MATERIALIZED (
   SELECT nd.vec_id, nd.out_deg,
          CAST(({PR_BASE} // n.n)
               + ({PR_D_NUM} * coalesce(c{i}.s, 0)) // {PR_D_DEN} AS BIGINT) AS p
@@ -2015,10 +2015,10 @@ pr{i} AS (
 
 KNN_PAGERANK_ORACLE = f"""
 WITH {_KNN_EDGES_CTES},
-edges AS (
+edges AS MATERIALIZED (
   SELECT src, dst FROM ranked WHERE rnk <= {KNN_K}
 ),
-nodes AS (
+nodes AS MATERIALIZED (
   SELECT u.vec_id,
          CAST(coalesce(o.c, 0) AS BIGINT) AS out_deg,
          CAST(coalesce(i.c, 0) AS BIGINT) AS in_deg
@@ -2026,8 +2026,8 @@ nodes AS (
   LEFT JOIN (SELECT src, count(*) AS c FROM edges GROUP BY src) o ON o.src = u.vec_id
   LEFT JOIN (SELECT dst, count(*) AS c FROM edges GROUP BY dst) i ON i.dst = u.vec_id
 ),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-pr0 AS (
+n AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
+pr0 AS MATERIALIZED (
   SELECT vec_id, out_deg, CAST({PR_SCALE} // n.n AS BIGINT) AS p
   FROM nodes CROSS JOIN n
 ),

@@ -41,7 +41,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..model import messages
+from ..model import local_table, messages
 from ..operators.pipeline import ROUTES
 
 # Message schema shared by the batch projection (model.MESSAGES_SQL_BODY)
@@ -117,6 +117,13 @@ def _commit(df: DataFrame, base: str, kind: str | None, batch_id: int) -> str:
     path = _path(base, kind, batch_id)
     df.coalesce(1).write.mode("overwrite").parquet(path)
     return path
+
+
+def _commit_read(df: DataFrame, base: str, kind: str, batch_id: int) -> DataFrame:
+    """``_commit``, then version N read back with ``df``'s own schema:
+    the committed bytes carry exactly that schema, so the read needs no
+    schema-inference job (one per re-read per trigger otherwise)."""
+    return df.sparkSession.read.schema(df.schema).parquet(_commit(df, base, kind, batch_id))
 
 
 def _read_pages(spark: SparkSession, base: str, kind: str, upto: int) -> DataFrame | None:
@@ -1508,7 +1515,7 @@ def _fold_source_totals(batch_df: DataFrame, state_dir: str, batch_id: int) -> D
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
     )
-    return spark.read.parquet(_commit(merged, state_dir, "totals", batch_id))
+    return _commit_read(merged, state_dir, "totals", batch_id)
 
 
 # --- E20: live Bloom dedup prefilter ---------------------------------------
@@ -1578,18 +1585,17 @@ def entropy_monitor_pipeline(
     )
     from ..functions.tokenize import TOKENS_SPARK
 
-    def merge_counts(spark, batch_cnt: DataFrame, kind: str, batch_id: int) -> str:
+    def merge_counts(spark, batch_cnt: DataFrame, kind: str, batch_id: int) -> DataFrame:
         prev = _prev(spark, state_dir, kind, batch_id)
         merged = _merge(batch_cnt, prev, ["source", "g"], F.sum("c").cast("bigint").alias("c"))
-        return _commit(merged, state_dir, kind, batch_id)
+        return _commit_read(merged, state_dir, kind, batch_id)
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        paths = [
+        uni, big = (
             merge_counts(spark, gram_counts_frame(batch_df, grams), kind, batch_id)
             for kind, grams in (("uni", TOKENS_SPARK), ("big", _BIGRAMS_SPARK))
-        ]
-        uni, big = (spark.read.parquet(p) for p in paths)
+        )
         _commit(entropy_from_counts(uni, big), state_dir, "entropy", batch_id)
 
     return _start(stream, update, checkpoint_dir)
@@ -1624,7 +1630,7 @@ def hll_monitor_pipeline(
         merged = _merge(
             hll_register_frame(batch_df), prev, ["source", "reg"], F.max("r").alias("r")
         )
-        regs = spark.read.parquet(_commit(merged, state_dir, "regs", batch_id))
+        regs = _commit_read(merged, state_dir, "regs", batch_id)
         _commit(hll_estimate_frame(regs), state_dir, "estimate", batch_id)
 
     return _start(stream, update, checkpoint_dir)
@@ -1658,7 +1664,7 @@ def hdr_quantile_pipeline(
             hdr_bucket_counts_frame(ev), prev, ["topic", "bucket"],
             F.sum("c").cast("bigint").alias("c"),
         )
-        cnt = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        cnt = _commit_read(merged, state_dir, "counts", batch_id)
         _commit(hdr_quantiles_frame(cnt), state_dir, "quantiles", batch_id)
 
     return _start(stream, update, checkpoint_dir)
@@ -1890,12 +1896,12 @@ def bm25_index_pipeline(
         docs = batch_df.select("doc_id", "text")
         new_tf = bm25_tf_frame(docs)
         new_dl = bm25_doclen_frame(docs)
-        paths = []
+        committed = []
         for kind, frame in (("tf", new_tf), ("dl", new_dl)):
             prev = _prev(spark, state_dir, kind, batch_id)
             merged = frame if prev is None else frame.unionByName(prev)
-            paths.append(_commit(merged, state_dir, kind, batch_id))
-        tf, dl = (spark.read.parquet(p) for p in paths)
+            committed.append(_commit_read(merged, state_dir, kind, batch_id))
+        tf, dl = committed
         _commit(bm25_topk_from(tf, dl), state_dir, "topk", batch_id)
 
     return _start(stream, update, checkpoint_dir)
@@ -2120,7 +2126,7 @@ def dsir_model_pipeline(
             F.sum("ct").cast("bigint").alias("ct"),
             F.sum("cr").cast("bigint").alias("cr"),
         )
-        cnt = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        cnt = _commit_read(merged, state_dir, "counts", batch_id)
         _commit(dsir_ratio_frame(cnt), state_dir, "ratio", batch_id)
 
     return _start(stream, update, checkpoint_dir)
@@ -2343,7 +2349,7 @@ def system_load_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str)
             F.min("mn").alias("mn"),
             F.max("mx").alias("mx"),
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "jobs", batch_id))
+        state = _commit_read(merged, state_dir, "jobs", batch_id)
         span = state.agg((F.max("mx") - F.min("mn")).alias("span"))
         jobs = state.filter(F.col("n_msgs") > 0).select(
             "topic", "part_id", "n_msgs", "n_bytes"
@@ -2609,7 +2615,7 @@ def index_drift_pipeline(
             F.sum("n_members").cast("bigint").alias("n_members"),
             F.sum("sum_d").cast("decimal(20,7)").alias("sum_d"),
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "cells", batch_id))
+        state = _commit_read(merged, state_dir, "cells", batch_id)
         _commit(drift_stats_from(state), state_dir, "drift", batch_id)
 
     return _start(vec_stream, fold, checkpoint_dir)
@@ -2690,7 +2696,7 @@ def kmv_sketch_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str):
         merged = kmv_bottomk(
             batch_sk if prev is None else batch_sk.unionByName(prev).distinct()
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "sketch", batch_id))
+        state = _commit_read(merged, state_dir, "sketch", batch_id)
         _commit(kmv_pair_estimates(state), state_dir, "pairs", batch_id)
 
     return _start(stream, fold, checkpoint_dir)
@@ -2867,7 +2873,7 @@ def vocab_growth_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str
             "n_types",
             *[F.col(c).cast("decimal(28,8)").alias(c) for c in _M_COLS],
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "moments", batch_id))
+        state = _commit_read(merged, state_dir, "moments", batch_id)
         _commit(heaps_fit_from(state), state_dir, "fit", batch_id)
         new_vocab = batch_vocab.select("source", "token")
         if prev_vocab is not None:
@@ -2915,7 +2921,7 @@ def zipf_drift_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: str):
             ["source", "token"],
             F.sum("c").cast("bigint").alias("c"),
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "counts", batch_id))
+        state = _commit_read(merged, state_dir, "counts", batch_id)
         _commit(zipf_fit_from(state), state_dir, "fit", batch_id)
 
     return _start(stream, fold, checkpoint_dir)
@@ -2995,8 +3001,8 @@ def pmi_collocation_pipeline(stream: DataFrame, state_dir: str, checkpoint_dir: 
             batch_pc, prev_pc, ["tok_l", "tok_r"],
             F.sum("pair_freq").cast("bigint").alias("pair_freq"),
         )
-        uni = spark.read.parquet(_commit(uni, state_dir, "uni", batch_id))
-        pc = spark.read.parquet(_commit(pc, state_dir, "pc", batch_id))
+        uni = _commit_read(uni, state_dir, "uni", batch_id)
+        pc = _commit_read(pc, state_dir, "pc", batch_id)
         _commit(pmi_topk_from(uni, pc), state_dir, "topk", batch_id)
 
     return _start(stream, fold, checkpoint_dir)
@@ -3169,9 +3175,9 @@ def markov_monitor_pipeline(
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        counts_path = _commit(counts, state_dir, "counts", batch_id)
+        committed_counts = _commit_read(counts, state_dir, "counts", batch_id)
         _commit(carry, state_dir, "carry", batch_id)
-        table = markov_table_from(spark.read.parquet(counts_path))
+        table = markov_table_from(committed_counts)
         _commit(table, state_dir, "table", batch_id)
 
     return _start(stream, fold, checkpoint_dir)
@@ -3249,7 +3255,7 @@ def cusum_monitor_pipeline(
             ["event_type", "m"],
             F.sum("c").cast("bigint").alias("c"),
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "minutes", batch_id))
+        state = _commit_read(merged, state_dir, "minutes", batch_id)
         wmax = Window.partitionBy("event_type")
         completed = (
             state.withColumn("mx", F.max("m").over(wmax))
@@ -3327,7 +3333,7 @@ def mixture_reweight_pipeline(
             # corpus-lifetime sums (10^20 integer digits headroom)
             F.sum("sum_nll").cast("decimal(28,8)").alias("sum_nll"),
         )
-        loss = spark.read.parquet(_commit(merged, state_dir, "loss", batch_id))
+        loss = _commit_read(merged, state_dir, "loss", batch_id)
         _commit(doremi_weights_from(loss), state_dir, "weights", batch_id)
 
     return _start(stream, fold, checkpoint_dir)
@@ -3485,7 +3491,7 @@ def _fertility_monitor_pipeline(
             ["source"],
             *[F.sum(c).cast("bigint").alias(c) for c in sum_cols],
         )
-        state = spark.read.parquet(_commit(merged, state_dir, "fert", batch_id))
+        state = _commit_read(merged, state_dir, "fert", batch_id)
         ratios = state.select(
             "source",
             "n_docs",
@@ -4077,6 +4083,6 @@ def curation_gate_pipeline(
             for i, a in enumerate(acct)
         ]
         schema = "batch_id long, stage string, stage_idx long, docs long, tokens long"
-        _commit(spark.createDataFrame(rows, schema), state_dir, "accounting", batch_id)
+        _commit(local_table(spark, rows, schema), state_dir, "accounting", batch_id)
 
     return _start(stream, gate, checkpoint_dir)
