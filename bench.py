@@ -1,15 +1,16 @@
 #!/usr/bin/env python
 """Headline-query benchmark. Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+ "value2": ..., "queries2": {...}, ..., "sf": ...}
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]. Each query is fully materialized via the noop
 sink (no collect-to-driver cost, no skipped projections).
 
-stdout is exactly one compact JSON line (< 2000 chars by construction,
-so the driver's tail-truncated record always parses and always carries
-the calibration witnesses + both totals); the full record with per-line
-ratio tables is written to bench_full.json and stderr.
+This is the driver contract only: it times the headline keys on one
+host and reports them. Comparisons between two trees belong to
+same-host interleaved A/Bs (perfbench/run.py); per-query stage
+evidence comes from scripts/perf_probe.py.
 """
 
 from __future__ import annotations
@@ -36,47 +37,11 @@ HEADLINE = [
     "ann_topk_lsh",
 ]
 
-# Pinned per-line baseline (BASELINE.md, = BENCH_r03.json) so every run
-# machine-checks the 1.3x-per-line rule instead of leaving it to the
-# judge's arithmetic. BASELINE_CAL is the r03 host's implied
-# calibration_sec: r03 predates the witness, but BASELINE.md records
-# that unchanged r03 code re-ran uniformly ~1.35x slower on the r04
-# host whose witness measured 0.1077 -> 0.1077 / 1.35 ~= 0.0798.
-BASELINE = {
-    "tpch_q1_pricing_summary": 1.116,
-    "tpch_q3_shipping_priority": 0.500,
-    "tpch_q5_local_supplier": 0.531,
-    "ack_commit_watermark": 0.279,
-    "rate_limit_tokens": 0.296,
-    "throughput_windows": 0.208,
-    "route_messages": 0.391,
-    "dedup_minhash_lsh": 0.545,
-    "ngram_jaccard_pairs": 1.509,
-    "dedup_simhash": 0.137,
-    "ann_topk_bruteforce": 0.182,
-    # ann_topk_lsh re-pinned round 11 (the BASELINE2 multiquery / r08
-    # BASELINE3 substring-trio precedent): composed source byte-
-    # identical to the r03 pin era (fn + knn_band_frame + _BUCKET_FOLD
-    # + _HP_MATRIX + _emb all proven equal), best-known plan twice
-    # A/B-confirmed (r10 semi-join trial, r11 checkpoint trial), yet no
-    # post-pin window ever reproduced 0.359: two at-pin windows read
-    # 0.607 s (r10 A, sc 0.1065) and 0.639 s (r11, sc 0.108) —
-    # sc-normalized to BASELINE_CAL: 0.455 / 0.472. Old pin 0.359 kept
-    # here for the longitudinal record; re-pinned at the two-window
-    # midpoint. ann_topk_bruteforce is NOT re-pinned: its normalized
-    # readings (0.169 / 0.194) BRACKET the 0.182 pin — reproducible.
-    "ann_topk_lsh": 0.46,
-}
-BASELINE_CAL = 0.0798
-
-# Second-generation headline set (pinned round 6): the expensive
-# families added after the r03 baseline froze — IVF-SQ8 ANN, BM25,
-# perceptual-hash dedup (corpus + incremental), DSIR selection, funnel,
-# connected components, SemDeDup. Without a pinned per-line rule these
-# had no regression gate (the hole the r04 dedup_simhash question came
-# through). Same protocol: raw seconds from the pin host plus that
-# host's calibration witness (measured in the SAME pin run), so
-# ratio2_calibrated divides out host speed exactly like the r03 set.
+# Later generations, in the order they joined the headline set: ANN /
+# BM25 / perceptual-hash / selection families, then exact-substring
+# dedup and the kNN graph, the three tokenizer trainers, the last TPC-H
+# shapes, and the sentence/paragraph span-dedup family. Each reports as
+# value{N}/queries{N}, the field names every recorded BENCH_r*.json uses.
 HEADLINE2 = [
     "ann_topk_ivf_int8",
     "bm25_topk",
@@ -91,34 +56,6 @@ HEADLINE2 = [
     "ann_multiquery_ivf",
     "corpus_snapshot_diff",
 ]
-BASELINE2 = {
-    "ann_topk_ivf_int8": 1.066,
-    "bm25_topk": 1.094,
-    "multimodal_phash_dedup": 1.55,
-    "phash_incremental_dedup": 2.339,
-    "dsir_selection": 0.833,
-    "funnel_conversion": 0.535,
-    "dedup_connected_components": 1.663,
-    "semdedup_prune": 1.096,
-    # pinned later in round 6; raw numbers normalized to BASELINE2_CAL
-    # so the whole set shares one calibration anchor. The multiquery /
-    # snapshot lines were first pinned off a single unusually fast
-    # window (0.545 / 0.541 raw) that later same-day idle best-of-5
-    # runs could not reproduce (1.18 / 0.96 raw at witness 0.1239);
-    # pinned at the REPRODUCIBLE normalized values below instead.
-    "ngram_decontamination": 0.721,
-    "ann_topk_pq": 1.649,
-    "ann_multiquery_ivf": 1.10,
-    "corpus_snapshot_diff": 0.91,
-}
-BASELINE2_CAL = 0.1156  # single-core witness on the r06 pin host
-BASELINE2_CAL_MC = 0.0406  # 32-thread witness on the r06 pin host
-
-# Third-generation headline set (pinned round 7, same protocol): the
-# operators added after BASELINE2 froze — the exact-substring dedup
-# family, the kNN-graph pair, the IVF refresh, and the classifier scan.
-# Raw seconds from the pin host (idle, warm, best-of-3) plus that
-# host's witnesses measured in the SAME run.
 HEADLINE3 = [
     "ivf_index_refresh",
     "exact_substring_dedup",
@@ -128,779 +65,72 @@ HEADLINE3 = [
     "knn_graph_lsh",
     "incr_knn_edges",
 ]
-# Re-pinned after the round-7 normalized-dot optimization (unit
-# vectors computed once per vector, single dot fold per candidate
-# pair) roughly halved both kNN lines — the pin reflects the shipped
-# code, so future regressions can't hide under the pre-optimization
-# numbers. First pin for reference: knn_graph_lsh 4.099,
-# incr_knn_edges 4.439 at cal 0.1159.
-BASELINE3 = {
-    "ivf_index_refresh": 2.042,
-    # Substring trio re-pinned round 8 (VERDICT r07 #4): the r07 pins
-    # (0.845 / 0.82 / 0.811) came from one favorable window that no
-    # later measurement reproduced — five-plus post-pin windows across
-    # r07/r08 read 0.98-1.22 s raw, including same-generation idle
-    # best-of-5 runs with normal md5 witnesses. Re-pinned at a
-    # normal-host-mode window's best-of-3, sc-normalized to
-    # BASELINE3_CAL (the ann_multiquery_ivf precedent: pin the
-    # REPRODUCIBLE value, not the fast episode). BASELINE.md round-8
-    # addendum has the full measurement trail.
-    "exact_substring_dedup": 1.04,
-    "incr_substring_dedup": 1.07,
-    "substring_span_removal": 1.10,
-    "quality_classifier_score": 0.304,
-    "knn_graph_lsh": 2.007,
-    "incr_knn_edges": 2.069,
-}
-BASELINE3_CAL = 0.1146  # single-core witness on the r07 pin host
-BASELINE3_CAL_MC = 0.0428  # 32-thread witness on the r07 pin host
-
-# Fourth-generation headline set (pinned round 8): the iterated-BPE
-# training family added this round. Same protocol: raw seconds from an
-# idle pin window (two windows measured, values stable at ±10%: train
-# 2.325/2.349, apply 2.825/2.575; pinned at the normal-sc window) plus
-# that window's witnesses. Both lines are checkpoint-chain-bound
-# (vocab-sized work behind 17 tiny jobs), so they price scheduler
-# latency like the substring trio — read breaches through
-# stage_evidence.
 HEADLINE4 = [
     "bpe_train_merges",
     "bpe_apply_fertility",
 ]
-BASELINE4 = {
-    "bpe_train_merges": 2.35,
-    "bpe_apply_fertility": 2.58,
-}
-BASELINE4_CAL = 0.105  # single-core witness on the r08 pin window
-
-# Fifth-generation headline set (pinned round 9): the unigram-LM
-# tokenizer family (D99/D100). Protocol per the substring-trio lesson:
-# best-of-5 in TWO idle windows (train 2.486/2.703, fertility
-# 2.922/3.275 — stable at ±10%), pinned at the midpoints; both
-# windows' sc witnesses normal-band (0.1061/0.1036) while the spark
-# witness read 0.24-0.26 (engine-overhead-heavy host generation, the
-# BENCH_r08 0.1752 class) — both lines are EM-checkpoint-chain-bound
-# (vocab-sized work behind 3 collect+count rounds), so like BASELINE4
-# they price scheduler latency: read breaches through stage_evidence.
 HEADLINE5 = [
     "unigram_lm_train",
     "unigram_lm_fertility",
 ]
-BASELINE5 = {
-    "unigram_lm_train": 2.60,
-    "unigram_lm_fertility": 3.10,
-}
-BASELINE5_CAL = 0.105  # single-core witness on the r09 pin windows
-
-# Sixth-generation headline set (pinned round 9): the four TPC-H
-# shapes that completed the family (C29-C32). Protocol: best-of-3 in
-# TWO idle windows at sf0.1, pinned at the midpoints (BASELINE.md
-# round-9 addendum records both windows + witnesses). All four are
-# single-job scan-dominated relational plans — no checkpoint chain —
-# so unlike BASELINE4/5 their breaches read directly, not through
-# stage_evidence.
 HEADLINE6 = [
     "tpch_q12_shipmode_priority",
     "tpch_q21_waiting_suppliers",
     "tpch_q16_supplier_part_types",
     "tpch_q11_important_balances",
 ]
-BASELINE6 = {
-    "tpch_q12_shipmode_priority": 0.52,
-    "tpch_q21_waiting_suppliers": 0.95,
-    "tpch_q16_supplier_part_types": 0.98,
-    "tpch_q11_important_balances": 0.95,
-}
-BASELINE6_CAL = 0.107  # single-core witness midpoint, r09 pin windows
-
-# Seventh-generation headline set (pinned round 9): the WordPiece
-# family (D101/D102), completing the third published tokenizer
-# trainer. Protocol per BASELINE4/5/6: best-of-3 at sf0.1 in TWO
-# windows, pinned at midpoints (BASELINE.md round-9 addendum 3 has
-# the trail + witnesses). Both lines are checkpoint-chain-bound like
-# the BPE/unigram families (K merge steps, each a tiny argmax job on
-# the vocab frame), so they price scheduler latency — read breaches
-# through stage_evidence.
 HEADLINE7 = [
     "wordpiece_train_merges",
     "wordpiece_apply_fertility",
 ]
-BASELINE7 = {
-    "wordpiece_train_merges": 2.58,
-    "wordpiece_apply_fertility": 2.83,
-}
-BASELINE7_CAL = 0.107  # single-core witness midpoint, r09 normal pin windows
-
-# The pinned generations in one table — adding a headline family is ONE
-# row here (review r08: the per-generation plumbing in main() was four
-# verbatim copies with ~15 coordinated touch points; a missed one
-# silently dropped that family's breach detection). The empty suffix is
-# the historic r03 field naming ("value"/"queries"/"ratio_total_raw").
-# gen8 (round 11): the sentence-span dedup family + the contamination
-# tier rule, pinned from a round-11 at-pin bench window (full-warmup
-# readings — the standalone pin probe read its witness 1.17-1.27
-# because the micro-plan's generated classes were cold; pins follow
-# the bench's own measurement conditions).
 HEADLINE8 = [
     "sentence_span_dedup",
     "incr_sentence_span_dedup",
     "line_dedup",
     "contamination_fraction",
 ]
-BASELINE8 = {
-    "sentence_span_dedup": 1.05,
-    "incr_sentence_span_dedup": 1.01,
-    "line_dedup": 1.09,
-    "contamination_fraction": 0.95,
-}
-BASELINE8_CAL = 0.105  # single-core witness on the r11 pin window
-
-# gen9 (round 12): the paragraph declared unit of the keep-one span
-# family (D109). Protocol per BASELINE8: pins follow in-bench readings
-# (full warmup) from at-pin windows, pinned at the two-clean-window
-# midpoint — the round-12 windows read 1.369 s (witness 1.074, the
-# documented excursion window), 1.189 s (witness 0.934, the round's
-# cleanest) and 1.454 s (witness 0.90, scheduler-noisy: gen7 read
-# 1.26-1.36 on identical bytes in the same window); pinned at the
-# midpoint of the two normal-class readings. BASELINE.md round-12
-# addendum records the full trail.
 HEADLINE9 = [
     "paragraph_span_dedup",
 ]
-BASELINE9 = {
-    "paragraph_span_dedup": 1.32,
-}
-BASELINE9_CAL = 0.1066  # single-core witness on the r12 pin windows
 
 GENERATIONS = [
-    ("", HEADLINE, BASELINE, BASELINE_CAL),
-    ("2", HEADLINE2, BASELINE2, BASELINE2_CAL),
-    ("3", HEADLINE3, BASELINE3, BASELINE3_CAL),
-    ("4", HEADLINE4, BASELINE4, BASELINE4_CAL),
-    ("5", HEADLINE5, BASELINE5, BASELINE5_CAL),
-    ("6", HEADLINE6, BASELINE6, BASELINE6_CAL),
-    ("7", HEADLINE7, BASELINE7, BASELINE7_CAL),
-    ("8", HEADLINE8, BASELINE8, BASELINE8_CAL),
-    ("9", HEADLINE9, BASELINE9, BASELINE9_CAL),
+    ("", HEADLINE),
+    ("2", HEADLINE2),
+    ("3", HEADLINE3),
+    ("4", HEADLINE4),
+    ("5", HEADLINE5),
+    ("6", HEADLINE6),
+    ("7", HEADLINE7),
+    ("8", HEADLINE8),
+    ("9", HEADLINE9),
 ]
 
-# Pinned Spark-native witness (round 8, VERDICT r07 #7): the engine-
-# overhead witness was introduced in round 7, so the only same-
-# generation reference values are that session's idle gate runs —
-# 0.1614/0.1623/0.1681 s on the BASELINE3-pin host generation (the
-# 0.2075 window was the contended outlier; BASELINE.md closing-gate
-# addendum). Pinned at the best idle value: a run whose
-# spark_witness_factor is well above 1 is engine-overhead-priced
-# (host generation / scheduler), and per-line breaches on sub-second
-# lines should be read through that factor — now a machine-emitted
-# field (spark_witness_factor, host_mode) instead of pin arithmetic.
-SPARK_WITNESS_PIN = 0.1614
-# md5-witness normal bands across all pin hosts (BASELINE.md): sc
-# 0.1061-0.1159, mc 0.0357-0.0428. Outside-band readings classify the
-# host mode mechanically (the round-4/round-7 adjudications as code).
-SC_BAND = (0.1061, 0.1159)
-MC_BAND = (0.0357, 0.0428)
+# The driver parses the LAST 2000 chars of output, so the line must stay
+# under this floor to survive whole: all 46 keys at a worst-case
+# 123.456 s make a 1844-char line (tests/test_bench_contract.py).
+TAIL_FLOOR = 1900
 
 
-def _host_mode(sc: float, mc: float, sw: float) -> str:
-    """Mechanical host-mode adjudication (BASELINE.md round-7 addendum):
-    - 'contended': mc witness elevated vs every pin (the r04/r05
-      noisy-neighbor signature) — raw lines inflate uniformly.
-    - 'anti_correlated': md5 FAST vs pins while the Spark witness is
-      elevated (the r07 signature) — calibrated ratios are poisoned,
-      read RAW ratios.
-    - 'engine_slow': md5 in band but Spark witness elevated — engine
-      overhead priced up; sub-second lines inflate.
-    - 'normal': all three witnesses in their pin bands."""
-    sw_hi = sw > 1.15 * SPARK_WITNESS_PIN
-    if mc > 1.15 * MC_BAND[1]:
-        return "contended"
-    if sc < 0.95 * SC_BAND[0] and sw_hi:
-        return "anti_correlated"
-    if sw_hi:
-        return "engine_slow"
-    if SC_BAND[0] * 0.95 <= sc <= SC_BAND[1] * 1.15 and mc <= MC_BAND[1] * 1.15:
-        return "normal"
-    # witnesses outside every documented signature (e.g. slow single-
-    # core md5 with a normal engine witness): surface it rather than
-    # calling it normal — an adjudicator must look at the triple.
-    return "unclassified"
-
-
-AT_PIN_FACTOR = 1.1  # spark-witness factor at/under which the engine is "at pin"
-HISTORY_PATH = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "bench_normal_history.json"
-)
-
-
-_CONST_REPR_MAX_DEPTH = 4
-
-
-def _const_repr(v, depth: int = 0) -> str | None:
-    """Deterministic repr for PLAIN-DATA module constants, or None for
-    anything whose repr is process-dependent (modules, functions,
-    Column objects, ...). set/frozenset/dict contents are SORTED by
-    element repr before joining — str hashing is randomized per
-    process (PYTHONHASHSEED), so a raw repr(set) would change the
-    fingerprint across sessions and silently invalidate every history
-    entry on every run."""
-    if isinstance(v, bool) or v is None:
-        return repr(v)
-    if isinstance(v, (str, bytes, int, float)):
-        return repr(v)
-    if depth >= _CONST_REPR_MAX_DEPTH:
-        return None
-    if isinstance(v, (tuple, list)):
-        parts = [_const_repr(x, depth + 1) for x in v]
-        if any(p is None for p in parts):
-            return None
-        return "[" + ",".join(parts) + "]"
-    if isinstance(v, (set, frozenset)):
-        parts = [_const_repr(x, depth + 1) for x in v]
-        if any(p is None for p in parts):
-            return None
-        return "{" + ",".join(sorted(parts)) + "}"
-    if isinstance(v, dict):
-        parts = []
-        for k, val in v.items():
-            kr = _const_repr(k, depth + 1)
-            vr = _const_repr(val, depth + 1)
-            if kr is None or vr is None:
-                return None
-            parts.append(kr + ":" + vr)
-        return "{" + ",".join(sorted(parts)) + "}"
-    return None
-
-
-def _query_src_md5(name: str) -> str | None:
-    """Fingerprint of the registered query's COMPOSED source — the
-    history staleness rule: an at-pin reading taken before a line's
-    implementation changed must not adjudicate the changed line (it
-    would indict or excuse a plan that no longer exists).
-
-    Hashing only the registered function's own text missed plan
-    changes inside SHARED HELPERS (ADVICE r11: corpus_snapshot_diff's
-    plan moved from a full-outer join to a hash-agg inside
-    snapshot_diff_hashed while the wrapper text — and so the old
-    fingerprint — was unchanged, keeping a stale 1.32x history entry
-    live). So: walk the function's referenced globals transitively
-    (including names used inside comprehensions/nested defs via nested
-    code objects) and hash the SORTED sources of every
-    uforwarder_spark function/class reached, PLUS (ADVICE r12) the
-    name=repr of every referenced PLAIN-DATA module constant — plans
-    are also built from module-level expression strings (SENTS_SPARK,
-    TOKENS_SPARK, SENT_PACK, ...) that co_names reaches but the
-    FunctionType/type filter skipped, so editing such a constant
-    changed every composed plan without invalidating its history
-    entry. Covered now: function/class edits and plain-constant edits
-    anywhere in the reachable composition; still outside the
-    fingerprint: values only computed at call time (e.g. reading a
-    config file), which no registered plan does."""
-    import hashlib
-    import inspect
-    import types
-
-    try:
-        from uforwarder_spark.registry import QUERIES
-
-        seen: set[int] = set()
-        srcs: list[str] = []
-        work = [QUERIES[name]]
-        while work:
-            obj = work.pop()
-            if id(obj) in seen:
-                continue
-            seen.add(id(obj))
-            try:
-                srcs.append(inspect.getsource(obj))
-            except (OSError, TypeError):
-                continue
-            code = getattr(obj, "__code__", None)
-            if code is None:
-                # a class: recurse into its methods
-                for attr in vars(obj).values():
-                    if isinstance(attr, types.FunctionType):
-                        work.append(attr)
-                continue
-            mod_globals = getattr(obj, "__globals__", {})
-            names: set[str] = set()
-            stack = [code]
-            while stack:
-                c = stack.pop()
-                names.update(c.co_names)
-                for const in c.co_consts:
-                    if isinstance(const, types.CodeType):
-                        stack.append(const)
-            cands = [(n, mod_globals[n]) for n in sorted(names) if n in mod_globals]
-            for cell in getattr(obj, "__closure__", None) or ():
-                try:
-                    cands.append(("<closure>", cell.cell_contents))
-                except ValueError:
-                    pass
-            for cname, cand in cands:
-                mod = getattr(cand, "__module__", None) or ""
-                if isinstance(cand, (types.FunctionType, type)) and mod.startswith(
-                    "uforwarder_spark"
-                ):
-                    work.append(cand)
-                    continue
-                # plain-data constant referenced by a uforwarder_spark
-                # function (the walked globals all belong to package
-                # modules): fold name=repr into the hashed material so
-                # editing it invalidates the composed fingerprint
-                rep = _const_repr(cand)
-                if rep is not None:
-                    srcs.append(f"const:{cname}={rep}")
-        return hashlib.md5("".join(sorted(srcs)).encode()).hexdigest()
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def load_normal_history() -> dict:
-    """Most recent at-pin-engine per-line raw ratios (written by any run
-    whose spark witness read <= AT_PIN_FACTOR). Missing/corrupt file =
-    empty history; an entry whose recorded src_md5 no longer matches
-    the line's current source is dropped (implementation changed since
-    the reading — carry-forward would be stale)."""
-    try:
-        with open(HISTORY_PATH) as f:
-            hist = json.load(f)
-    except Exception:  # noqa: BLE001
-        return {}
-    out = {}
-    for name, entry in hist.items():
-        rec = entry.get("src_md5")
-        if rec is not None:
-            cur = _query_src_md5(name)
-            if cur is not None and cur != rec:
-                continue
-        out[name] = entry
-    return out
-
-
-SUB_SECOND_PIN = 0.5  # pins under this retry best-of-3 with spread
-
-
-def retry_tries(pin_sec: float) -> int:
-    """How many timings the normal-window retry takes for one breached
-    line (VERDICT r10 #3): a single shot on a sub-second pin is
-    noise-dominated — one GC pause reads 4x (round 10's at-pin retry
-    read dedup_simhash at 4.22x while the same session's calibrated
-    main reading was 1.43x), so a one-shot retry can both fabricate
-    and hide plan_work verdicts. Sub-second pins take best-of-3;
-    multi-second lines keep best-of-2 (their walls amortize noise)."""
-    return 3 if pin_sec < SUB_SECOND_PIN else 2
-
-
-def retry_stats(samples: list, pin_sec: float) -> tuple:
-    """(best_ratio, spread) for one line's retry samples: best_ratio =
-    min(samples)/pin (steady-state plan cost — the adjudicating
-    number); spread = max/min across the samples (noise witness,
-    recorded in bench_full.json: ~1 means the reading is trustworthy,
-    >=2 means the window was noisy and the ratio reads accordingly)."""
-    best = min(samples)
-    return round(best / pin_sec, 2), round(max(samples) / best, 2)
-
-
-HISTORY_MAX_AGE_SEC = 72 * 3600  # ~a dozen rounds on this cadence
-
-
-def merge_history_entry(old, new):
-    """Keep the BEST at-pin reading per line while the source is
-    unchanged (load_normal_history already dropped entries whose
-    recorded fingerprint mismatches the current source, so an `old`
-    seen here is comparable): the history answers "does this line
-    exceed 1.3x on an at-pin engine?", and the fairest witness is the
-    best window — one noisy at-pin window must not overwrite four
-    in-band ones (the round-11 excursion-window lesson). `n_windows`
-    counts how many at-pin readings the entry has survived.
-
-    Best readings AGE OUT (ADVICE r12): an unchanged source kept its
-    historical-best forever, so a persistent environment- or
-    data-driven slowdown (JVM/config change, corpus growth at the same
-    sf) could never re-surface through the corroboration path. A kept
-    best older than HISTORY_MAX_AGE_SEC yields to the current window's
-    reading and the corroboration count restarts — the "can this plan
-    run at pin" witness stays current, not historical-best-forever.
-    (Bench runs at least once per round, so a live at-pin plan renews
-    its witness long before the horizon.)"""
-    stale = (
-        old is not None
-        and new.get("ts", 0) - old.get("ts", 0) > HISTORY_MAX_AGE_SEC
-    )
-    # units-fix migration (r12 lesson #2): an entry without a recorded
-    # window host factor predates calibrated corroboration — its raw
-    # reading is not comparable under the new bar (for gen1 lines it
-    # over-escalates by the ~1.37x epoch factor), so it yields to the
-    # current at-pin reading and the corroboration count restarts.
-    if old is not None and "hf" not in old:
-        stale = True
-    if old is None or stale:
-        fresh = dict(new)
-        fresh["n_windows"] = 1
-        return fresh
-    n_seen = old.get("n_windows", 1) + 1
-    best = new if new["raw_ratio"] <= old["raw_ratio"] else dict(old)
-    best["n_windows"] = n_seen
-    return best
-
-
-def corroboration_reading(window_ratio, hist_entry, hf: float = 1.0):
-    """The at-pin reading that corroborates (or escalates) a
-    host_priced breach, in HOST-CALIBRATED units: the BEST of this
-    window's own ratio and the history's best-of-window entry for the
-    line's unchanged source (load_normal_history already dropped
-    changed-source entries), each divided by its window's generation
-    host factor before comparing.
-
-    Round-12 lesson #1 (same shape as the r11 history-merge lesson one
-    layer down): the corroboration question is "can this plan run at
-    pin", and on checkpoint-chain lines (sched share ~0.9) a single
-    at-pin window's reading swings 0.94-1.36 on identical code —
-    window 4 of r12 shipped wordpiece_apply_fertility as actionable
-    plan_work at 1.36 when window 3 had just read the same bytes at
-    0.94. A line only escalates when NO at-pin window (this one or any
-    recorded) has shown it in-band.
-
-    Round-12 lesson #2 (the units bug): the escalation bar compared
-    RAW ratios against 1.3, while the main breach rule is CALIBRATED —
-    for gen1 lines pinned on the r03-era host (1.37x faster
-    single-core than the r12 epoch, BASELINE.md host-normalization
-    section) an at-pin raw reading of 1.34 is ~0.98 CALIBRATED, i.e.
-    at pin, yet the raw bar shipped dedup_simhash actionable plan_work
-    on a healthy plan (six at-pin windows, best raw 1.34 = best
-    calibrated ~0.98). `hf` is THIS window's generation host factor;
-    history entries carry the factor of the window that wrote them
-    (older entries without one degrade to raw — conservative)."""
-    wr = window_ratio / hf if window_ratio is not None else None
-    hr = None
-    if hist_entry and hist_entry.get("raw_ratio") is not None:
-        hr = hist_entry["raw_ratio"] / hist_entry.get("hf", 1.0)
-    if wr is None:
-        return round(hr, 2) if hr is not None else None
-    if hr is not None:
-        return round(min(wr, hr), 2)
-    return round(wr, 2)
-
-
-def corroborated_verdict(verdict: str, normal_ratio) -> str:
-    """VERDICT r09 #2 (the engine_slow blind spot): on a slow-engine
-    window, sched-share >= 0.4 is near-universal for sub-3-second
-    lines, so 'host_priced' alone cannot clear a line — it must be
-    corroborated by a NORMAL-window reading of the same line (a
-    same-run late-window re-time after the witness recovers, or the
-    most recent at-pin run's recorded ratio). A line that breaches the
-    1.3x bar ON AN AT-PIN ENGINE TOO is plan work, whatever its sched
-    share; a missing reading leaves host_priced standing but visibly
-    uncorroborated (normal_window_ratios carries null). The reading is
-    HOST-CALIBRATED (corroboration_reading r12 lesson #2) — the same
-    units as the main per-line rule."""
-    if verdict == "host_priced" and normal_ratio is not None and normal_ratio > 1.3:
-        return "plan_work"
-    return verdict
-
-
-JIT_EPISODE_MIN_RAW = 3.0  # a plan does not get 3x slower without a source edit
-
-
-def jit_episode_candidate(raw_ratio, sched_share, hist_entry) -> bool:
-    """Is this plan_work breach the one-JVM codegen/JIT-storm signature
-    (VERDICT r11 #2 / BASELINE.md round-11 addendum 2)? The official
-    r11 record shipped dedup_simhash as actionable plan_work at 7.9x
-    when the line was healthy — the compute genuinely ran ~8x (sched
-    share 0.319, i.e. NOT host_priced) inside one poisoned JVM, and
-    both the main best-of-N and the in-session retry re-read the same
-    JVM. Signature: raw ratio beyond anything a plan regression
-    produces (> 3x), genuine-compute stage evidence (sched share
-    < 0.4), an UNCHANGED source (load_normal_history already dropped
-    entries whose fingerprint mismatches, so a surviving entry proves
-    it) whose history reading is in-band (<= 1.3 CALIBRATED via the
-    entry's recorded window host factor — r12 units lesson). Such a
-    line earns
-    ONE fresh-JVM re-time before the verdict ships."""
-    return (
-        raw_ratio is not None
-        and raw_ratio > JIT_EPISODE_MIN_RAW
-        and sched_share is not None
-        and sched_share < 0.4
-        and hist_entry is not None
-        and hist_entry.get("raw_ratio") is not None
-        and hist_entry["raw_ratio"] / hist_entry.get("hf", 1.0) <= 1.3
-    )
-
-
-def apply_jit_adjudication(
-    verdicts, raw_ratios, sched_shares, history, retime_fn, hfs=None
-):
-    """Re-adjudicate plan_work verdicts that match the JIT-episode
-    signature against ONE fresh-JVM reading (retime_fn -> dict with
-    'ratio' = best_sec/pin and 'sw_factor' = that JVM's own engine
-    witness factor, or None on failure). The episode clears ONLY if
-    the fresh JVM is itself at pin AND reads the line in-band (<= 1.3
-    CALIBRATED by the line's current-window generation host factor,
-    `hfs` — r12 units lesson) — an out-of-band fresh reading, a slow
-    fresh engine, or a failed retime leaves plan_work standing (the
-    record must never clear a real regression on a technicality).
-    Returns (new_verdicts, retimes); pure so tests drive it with a
-    fake retime_fn."""
-    out = dict(verdicts)
-    retimes = {}
-    for name, v in verdicts.items():
-        if v != "plan_work":
-            continue
-        if not jit_episode_candidate(
-            raw_ratios.get(name), sched_shares.get(name), history.get(name)
-        ):
-            continue
-        fresh = retime_fn(name)
-        retimes[name] = fresh
-        hf = (hfs or {}).get(name, 1.0)
-        if (
-            fresh is not None
-            and fresh.get("sw_factor") is not None
-            and fresh["sw_factor"] <= AT_PIN_FACTOR
-            and fresh.get("ratio") is not None
-            and fresh["ratio"] / hf <= 1.3
-        ):
-            out[name] = "jit_episode"
-    return out, retimes
-
-
-def _fresh_jvm_retime(name: str, sf_dir: str):
-    """One fresh-JVM reading of a single line: `python bench.py
-    --time-one NAME` in a SUBPROCESS (its own SparkSession/JVM — the
-    whole point: the parent JVM's generated-code cache is the suspect).
-    The parent session sits idle meanwhile, so the box still runs one
-    Spark workload at a time. Returns the child's JSON dict or None;
-    a failure must never cost the record (the round-6 lesson)."""
-    import subprocess
-
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--time-one", name],
-            env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
-            capture_output=True,
-            text=True,
-            timeout=900,
-        )
-        for ln in reversed(proc.stdout.strip().splitlines()):
-            try:
-                return json.loads(ln)
-            except ValueError:
-                continue
-    except Exception:  # noqa: BLE001
-        pass
-    return None
-
-
-def time_one(name: str) -> None:
-    """--time-one mode: time ONE pinned line in this (fresh) JVM and
-    print a single JSON line. Protocol mirrors main(): warm the line
-    and the witness micro-plan at sf0.001 first (generated classes are
-    keyed by expressions, not paths — the BASELINE8 pin probe showed a
-    cold witness reads 1.17-1.27x), then witness best-of-5, then the
-    line best-of-retry_tries(pin) with the spread recorded."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    from uforwarder_spark.registry import QUERIES
-    from uforwarder_spark.session import get_spark
-
-    pin = None
-    for _sfx, _names, baseline, _c in GENERATIONS:
-        if name in baseline:
-            pin = baseline[name]
-    spark = get_spark("uforwarder-bench-timeone")
-    spark.sparkContext.setLogLevel("ERROR")
-    warm_dir = "/root/testdata/sf0.001"
-    for warm_name in (name, "tpch_q6_forecast_revenue"):
-        for _ in range(2):
-            QUERIES[warm_name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark.catalog.clearCache()
-    sw_best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        QUERIES["tpch_q6_forecast_revenue"](spark, warm_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        sw_best = min(sw_best, time.perf_counter() - t0)
-    samples = []
-    for _ in range(retry_tries(pin if pin is not None else 1.0)):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - t0)
-        spark.catalog.clearCache()
+def contract_line(timings: dict[str, dict[str, float]], sf) -> str:
+    """The one stdout line: {"metric", "value", "unit", "queries"} for
+    the first generation, value{N}/queries{N} for the rest, then "sf".
+    `timings` maps each generation suffix to its {name: best_sec}."""
+    totals = {sfx: round(sum(t.values()), 3) for sfx, t in timings.items()}
     out = {
-        "name": name,
-        "best_sec": round(min(samples), 3),
-        "samples": [round(s, 3) for s in samples],
-        "spark_witness_sec": round(sw_best, 4),
-        "sw_factor": round(sw_best / SPARK_WITNESS_PIN, 3),
+        "metric": "headline_queries_total_wall",
+        "value": totals[""],
+        "unit": "sec",
+        "queries": timings[""],
     }
-    if pin is not None:
-        out["ratio"], out["spread"] = retry_stats(samples, pin)
-    print(json.dumps(out))
+    for sfx, _names in GENERATIONS[1:]:
+        out[f"value{sfx}"] = totals[sfx]
+        out[f"queries{sfx}"] = timings[sfx]
+    out["sf"] = sf
+    return json.dumps(out)
 
 
-def breach_verdict(raw_ratio, sw_factor, sched_share) -> str:
-    """Mechanical per-breach adjudication (VERDICT r08 #4 + the r09
-    cal_artifact refinement), unit-tested in tests/test_bench_gate.py:
-    - 'cal_artifact': RAW ratio inside the 1.3x bar while the spark
-      witness reads the engine at/near pin (factor <= 1.1) — the md5
-      witness ran fast and calibration inflated the ratio (the r07
-      anti-correlation adjudication as code). Takes priority: a line
-      cannot need plan work when its uncalibrated wall is at pin on an
-      at-pin engine.
-    - 'host_priced': captured sched_overhead_share >= 0.4 on a
-      plan-asserted unchanged plan (tests/test_plans.py pins shapes) —
-      stage-boundary/scheduler latency, not compute.
-    - 'no_evidence': the evidence capture failed — stays actionable.
-    - 'plan_work': everything else — the only verdict that demands
-      attention."""
-    if raw_ratio is not None and raw_ratio <= 1.3 and sw_factor <= 1.1:
-        return "cal_artifact"
-    if sched_share is None:
-        return "no_evidence"
-    if sched_share >= 0.4:
-        return "host_priced"
-    return "plan_work"
-
-
-def _stage_evidence(spark, fn, sf_dir: str) -> dict:
-    """Per-stage wall/task-time evidence for a flagged line (VERDICT r07
-    #2): re-run the query once and read the stages it created from the
-    AppStatusStore (populated with the UI disabled). The adjudicating
-    number is sched_overhead_share = 1 − (Σ executorRunTime / 32) /
-    wall: near 1 means the line's wall is scheduler/launch latency
-    (host-priced — many tiny stages), near 0 means executors were busy
-    the whole time (a genuinely compute-bound plan, where a breach
-    would indict the plan itself)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-
-    def _stages():
-        dflt = lambda n: getattr(store, f"stageList$default${n}")()  # noqa: E731
-        lst = store.stageList(empty, dflt(2), dflt(3), dflt(4), dflt(5))
-        return [lst.apply(i) for i in range(lst.size())]
-
-    before = max((s.stageId() for s in _stages()), default=-1)
-    t0 = time.perf_counter()
+def _noop(fn, spark, sf_dir: str) -> None:
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    spark.catalog.clearCache()
-    rows = []
-    for s in _stages():
-        if s.stageId() <= before:
-            continue
-        rows.append(
-            {
-                "stage": s.stageId(),
-                "name": str(s.name())[:72],
-                "tasks": s.numTasks(),
-                "run_ms": int(s.executorRunTime()),
-                "cpu_ms": round(s.executorCpuTime() / 1e6, 1),
-                "shuffle_read_mb": round(s.shuffleReadBytes() / 1e6, 3),
-                "shuffle_write_mb": round(s.shuffleWriteBytes() / 1e6, 3),
-            }
-        )
-    rows.sort(key=lambda d: -d["run_ms"])
-    run_total = sum(d["run_ms"] for d in rows) / 1000.0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return {
-        "wall_sec": round(wall, 3),
-        "n_stages": len(rows),
-        "n_tasks": sum(d["tasks"] for d in rows),
-        "executor_run_sec": round(run_total, 3),
-        "executor_cpu_sec": round(sum(d["cpu_ms"] for d in rows) / 1000.0, 3),
-        "ideal_parallel_sec": round(run_total / cpus, 3),
-        "sched_overhead_share": round(max(0.0, 1 - (run_total / cpus) / wall), 3)
-        if wall > 0
-        else None,
-        "stages": rows[:15],
-    }
-
-
-def _calibration_sec() -> float:
-    """Single-core host-speed witness: md5 over a fixed 64 MiB buffer,
-    best of 3. Successive rounds run on different VM hosts whose CPU
-    speed varies by tens of percent; dividing totals by this number
-    makes cross-round comparisons host-independent (the queries and the
-    witness scale together — both are CPU-bound on this data size)."""
-    import hashlib
-
-    buf = bytes(range(256)) * (64 * 1024 * 1024 // 256)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        hashlib.md5(buf).hexdigest()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-def _calibration_mc_sec() -> float:
-    """Multi-core host-speed witness: 32 threads each md5-ing 16 MiB
-    (hashlib releases the GIL), wall time, best of 3. The single-core
-    witness measures an uncontended burst and MISSED the round-4
-    condition — a host whose 32-thread throughput was degraded (noisy
-    neighbor / CPU steal) while single-core md5 read normal, which made
-    every bench line ~1.2-2.5x slower at an unchanged calibration_sec.
-    The Spark workload runs local[32]; this witness contends the same
-    way."""
-    import hashlib
-    import threading
-
-    buf = bytes(range(256)) * (16 * 1024 * 1024 // 256)
-    best = float("inf")
-    for _ in range(3):
-        threads = [
-            threading.Thread(target=lambda: hashlib.md5(buf).hexdigest())
-            for _ in range(32)
-        ]
-        t0 = time.perf_counter()
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
-
-
-# The driver parses the LAST 2000 chars of output (BENCH_r*.json
-# "tail"), so the compact line must stay under 1900 chars to survive
-# whole. If some addition pushes past the window, shed the least
-# essential fields rather than lose parseability.
-#
-# Shed order (belt-and-braces):
-# - the queries2..9 dicts duplicate bench_full.json, so they go first;
-#   the PRIMARY "queries" dict is the driver contract's required field
-#   ({"metric", "value", "unit", "queries", "sf"}) and NEVER sheds —
-#   round 12's line grew past 1900 and the old order silently dropped
-#   it, which reads as "every query removed" to a contract check.
-# - breach_verdicts duplicates stage_evidence + the 0.4 rule, so it
-#   sheds next; then stage_evidence (full copy in bench_full.json).
-# - the per-line breach NAME lists shed before normal_window_ratios:
-#   the ratios are the host_priced corroboration proof (VERDICT r09
-#   #2); actionable_breaches is the adjudication itself and sheds
-#   dead last.
-SHED_FLOOR = 1900
-
-
-def shed_to_fit(compact: dict) -> str:
-    shed_order = (
-        [f"queries{sfx}" for sfx, *_ in reversed(GENERATIONS) if sfx]
-        + ["breach_verdicts", "stage_evidence"]
-        + [f"per_line_breaches{sfx}" for sfx, *_ in reversed(GENERATIONS)]
-        + ["normal_window_ratios", "actionable_breaches"]
-    )
-    line = json.dumps(compact)
-    for shed in shed_order:
-        if len(line) <= SHED_FLOOR:
-            break
-        compact.pop(shed, None)
-        line = json.dumps(compact)
-    return line
 
 
 def main() -> None:
@@ -920,346 +150,32 @@ def main() -> None:
     # executor throughput, the quantity that matters at scale, instead
     # of one-time driver compile cost.
     warm_dir = "/root/testdata/sf0.001"
-    for _sfx, names, _b, _c in GENERATIONS:
+    for _sfx, names in GENERATIONS:
         for name in names:
-            QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            _noop(QUERIES[name], spark, warm_dir)
             spark.catalog.clearCache()
-
-    # Spark-native witness: a fixed micro-plan (scan + filter + partial
-    # agg over the sf0.001 lineitem) timed best-of-5 AFTER warmup. The
-    # md5 witnesses measure CPU-core speed; this measures what they
-    # cannot: JVM task-launch / scheduler / codegen overhead — the term
-    # that dominates every sub-second headline line. Motivation
-    # (BASELINE.md round-7 addendum): an idle round-7 host window read
-    # BOTH md5 witnesses ~20% FASTER than the pins while identical-code
-    # raw Spark wall ran ~1.4x the same-session gate run — md5
-    # anti-correlated with engine speed, so per-line adjudication needs
-    # an engine-side witness. On the BASELINE3 pin-generation host this
-    # reads ~0.10-0.13 s (recorded in the addendum).
-    sw_best = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        QUERIES["tpch_q6_forecast_revenue"](spark, warm_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        sw_best = min(sw_best, time.perf_counter() - t0)
-    spark_witness = round(sw_best, 4)
 
     # best-of-3 per query: one measured run can eat a stray GC pause or
     # scheduler hiccup; the min reflects the plan's steady-state cost.
-    # One data-driven pass over the pinned generations (review r08:
-    # previously four verbatim copies of this plumbing — a missed touch
-    # point when adding a generation silently dropped that family's
-    # breach detection). Field names keep their historic suffixes
-    # ("" for the r03 set, "2".."4" after), so every recorded
-    # BENCH_r{N}.json stays comparable.
-    gens = {}
-    for sfx, names, baseline, base_cal in GENERATIONS:
-        timings: dict[str, float] = {}
+    timings: dict[str, dict[str, float]] = {}
+    for sfx, names in GENERATIONS:
+        timings[sfx] = {}
         for name in names:
-            fn = QUERIES[name]
             best = float("inf")
             for _ in range(3):
                 t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                _noop(QUERIES[name], spark, sf_dir)
                 best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
+            timings[sfx][name] = round(best, 3)
             # a few operators persist() intermediates reused across plan
             # branches; within one query's best-of-3 Spark's cache
             # manager dedupes identical plans (and re-runs legitimately
             # reuse the cache, as a session user's would), but across
             # QUERIES the entries differ and would accumulate
             spark.catalog.clearCache()
-        gens[sfx] = {"timings": timings, "total": round(sum(timings.values()), 3)}
 
-    cal = _calibration_sec()
-    mc = _calibration_mc_sec()
-    for sfx, names, baseline, base_cal in GENERATIONS:
-        g = gens[sfx]
-        hf = round(cal / base_cal, 3)
-        g["host_factor"] = hf
-        # Per-line ratios vs the pinned baseline, raw and
-        # host-calibrated — BASELINE.md's 1.3x-per-line rule,
-        # machine-checked every run.
-        g["ratios"] = {
-            n: {
-                "ratio_vs_baseline": round(g["timings"][n] / baseline[n], 2),
-                "ratio_calibrated": round(
-                    g["timings"][n] / baseline[n] / hf, 2
-                ),
-            }
-            for n in names
-            if n in baseline and sf == "0.1"
-        }
-        # Raw total ratios alongside the calibrated ones: on hosts where
-        # the md5 witness anti-correlates with engine speed (BASELINE.md
-        # round-7 addendum), the RAW ratio + spark_witness_sec carry the
-        # adjudication — one-field reads, not pin arithmetic.
-        pin_total = sum(baseline.values())
-        g["ratio_raw"] = (
-            round(g["total"] / pin_total, 3) if sf == "0.1" else None
-        )
-        g["ratio_cal"] = (
-            round(g["total"] / pin_total / hf, 3) if sf == "0.1" else None
-        )
-        g["breaches"] = sorted(
-            n for n, r in g["ratios"].items() if r["ratio_calibrated"] > 1.3
-        )
-
-    # The driver records only the LAST 2000 chars of stdout and parses
-    # the JSON it finds there. Round 6's single long line lost its head
-    # (value/queries/witnesses) to that truncation — BENCH_r06.json
-    # recorded "parsed": null and the contention-vs-regression
-    # adjudication became impossible from the official record. So:
-    # stdout carries EXACTLY ONE compact JSON line, kept under 2000
-    # chars by construction (per-line ratio dicts are derivable from
-    # queries + the pinned baselines + the witnesses, so they are
-    # replaced by the decision they exist for: the breach-name lists);
-    # the full record with both ratio tables goes to stderr and
-    # bench_full.json for the builder.
-    # Stage-level evidence for every per-line breach (VERDICT r07 #2):
-    # the flagged line re-runs once with its stages captured, so the
-    # "host-priced vs plan defect" call is made from stage skew, not
-    # witness inference. Compact stdout carries the 3-number verdict
-    # per line; the full per-stage tables go to bench_full.json.
-    breach_names = sorted(
-        {n for sfx, *_ in GENERATIONS for n in gens[sfx]["breaches"]}
-    )
-    _raw_ratio_pre = {
-        n: r["ratio_vs_baseline"]
-        for sfx, *_ in GENERATIONS
-        for n, r in gens[sfx]["ratios"].items()
-    }
-    _sw_factor_pre = spark_witness / SPARK_WITNESS_PIN
-    stage_full: dict[str, dict] = {}
-    stage_compact: dict[str, dict] = {}
-    for name in breach_names:
-        # cal_artifact lines (see breach_verdict) skip the evidence
-        # re-run — their adjudication reads the raw ratio + engine
-        # witness, not stage skew, so the rerun would be pure cost
-        if breach_verdict(_raw_ratio_pre.get(name), _sw_factor_pre, None) == (
-            "cal_artifact"
-        ):
-            stage_compact[name] = None
-            continue
-        # never let the evidence pass cost the record itself: a failure
-        # here (py4j API drift, a one-off rerun blowing up) must not
-        # lose the timing JSON the whole round's adjudication reads
-        # (the round-6 lost-record failure mode)
-        try:
-            ev = _stage_evidence(spark, QUERIES[name], sf_dir)
-        except Exception as exc:  # noqa: BLE001
-            ev = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        stage_full[name] = ev
-        # compact carries ONLY the adjudicating number per line
-        # (sched_overhead_share); wall/exec/stage tables live in
-        # bench_full.json
-        stage_compact[name] = ev.get("sched_overhead_share")
-
-    # Normal-window corroboration (VERDICT r09 #2): every host_priced
-    # call must carry an at-pin reading. From r12 the recorded
-    # normal_window_ratios are HOST-CALIBRATED (reading / the line's
-    # generation host factor at the window that produced it) — the
-    # same units as the per-line breach rule; see
-    # corroboration_reading's r12 lesson #2. Three
-    # sources in priority order: (a) this window IS at pin — its own
-    # ratio is the reading; (b) late-window retry — the witness is
-    # re-read after the evidence pass (minutes later on a different
-    # scheduler moment) and, if recovered to pin, each breached line
-    # re-times in that window; (c) carry-forward from the most recent
-    # at-pin run recorded in bench_normal_history.json.
-    _pin_by_name = {
-        n: b[n] for _sfx, _names, b, _c in GENERATIONS for n in b
-    }
-    # this window's generation host factor per line — the calibrated
-    # units every corroboration reading is expressed in (r12 lesson #2)
-    _hf_by_name = {
-        n: gens[sfx]["host_factor"]
-        for sfx, _names, b, _c in GENERATIONS
-        for n in b
-    }
-    normal_ratios: dict = {}
-    retry_spread: dict = {}  # per-line max/min across retry samples
-    retry_factor = None
-    history = load_normal_history() if (breach_names and sf == "0.1") else {}
-    if breach_names and sf == "0.1":
-        if _sw_factor_pre <= AT_PIN_FACTOR:
-            # this window IS at pin — but one window's reading is not
-            # the whole story for scheduler-priced lines: consult the
-            # best recorded at-pin reading too (corroboration_reading)
-            normal_ratios = {
-                n: corroboration_reading(
-                    _raw_ratio_pre.get(n), history.get(n), _hf_by_name.get(n, 1.0)
-                )
-                for n in breach_names
-            }
-        else:
-            sw2 = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                QUERIES["tpch_q6_forecast_revenue"](spark, warm_dir).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                sw2 = min(sw2, time.perf_counter() - t0)
-            retry_factor = round(sw2 / SPARK_WITNESS_PIN, 3)
-            for name in breach_names:
-                if retry_factor <= AT_PIN_FACTOR and name in _pin_by_name:
-                    pin = _pin_by_name[name]
-                    samples = []
-                    for _ in range(retry_tries(pin)):
-                        t0 = time.perf_counter()
-                        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        samples.append(time.perf_counter() - t0)
-                        spark.catalog.clearCache()
-                    normal_ratios[name], retry_spread[name] = retry_stats(
-                        samples, pin
-                    )
-                    normal_ratios[name] = corroboration_reading(
-                        normal_ratios[name],
-                        history.get(name),
-                        _hf_by_name.get(name, 1.0),
-                    )
-                else:
-                    normal_ratios[name] = corroboration_reading(
-                        None, history.get(name)
-                    )
-
-    # Mechanical per-breach verdicts (the `breach_verdict` rule above +
-    # the corroboration rule, both unit-tested): the record keeps every
-    # breach; the ACTIONABLE list is the adjudication — zero prose.
-    breach_verdicts = {
-        name: corroborated_verdict(
-            breach_verdict(
-                _raw_ratio_pre.get(name), _sw_factor_pre, stage_compact[name]
-            ),
-            normal_ratios.get(name),
-        )
-        for name in breach_names
-    }
-    # Fresh-JVM adjudication of JIT-episode candidates (VERDICT r11
-    # #2): a plan_work verdict whose signature says one-JVM codegen
-    # storm (raw > 3x, genuine compute, unchanged source with an
-    # in-band history reading) gets ONE re-time in a fresh JVM before
-    # it ships — both the main best-of-N and the in-session retry run
-    # inside the same poisoned JVM, so no in-session reading can clear
-    # (or confirm) the episode. An in-band fresh reading relabels the
-    # line 'jit_episode' (non-actionable, episode visible in the
-    # record); anything else leaves plan_work standing.
-    jit_retimes: dict = {}
-    if sf == "0.1":
-        breach_verdicts, jit_retimes = apply_jit_adjudication(
-            breach_verdicts,
-            _raw_ratio_pre,
-            stage_compact,
-            history,
-            lambda n: _fresh_jvm_retime(n, sf_dir),
-            _hf_by_name,
-        )
-        for n, fresh in jit_retimes.items():
-            if (
-                fresh is not None
-                and fresh.get("ratio") is not None
-                and fresh.get("sw_factor") is not None
-                and fresh["sw_factor"] <= AT_PIN_FACTOR
-            ):
-                # the fresh JVM was at pin: its reading IS a
-                # normal-window corroboration for this line
-                # (calibrated like every corroboration reading)
-                normal_ratios[n] = round(
-                    fresh["ratio"] / _hf_by_name.get(n, 1.0), 2
-                )
-    actionable = sorted(
-        n
-        for n, v in breach_verdicts.items()
-        if v not in ("host_priced", "cal_artifact", "jit_episode")
-    )
-
-    compact = {"metric": "headline_queries_total_wall"}
-    compact["value"] = gens[""]["total"]
-    compact["unit"] = "sec"
-    compact["queries"] = gens[""]["timings"]
-    for sfx, *_ in GENERATIONS[1:]:
-        compact[f"value{sfx}"] = gens[sfx]["total"]
-        compact[f"queries{sfx}"] = gens[sfx]["timings"]
-    compact["calibration_sec"] = cal
-    compact["calibration_mc_sec"] = mc
-    compact["spark_witness_sec"] = spark_witness
-    # host_factor_vs_baseline{sfx} live in bench_full.json only —
-    # derivable as calibration_sec / BASELINE*_CAL; the chars fund the
-    # stage-evidence verdicts instead
-    for sfx, *_ in GENERATIONS:
-        compact[f"ratio{sfx}_total_raw"] = gens[sfx]["ratio_raw"]
-    for sfx, *_ in GENERATIONS:
-        compact[f"ratio{sfx}_total_calibrated"] = gens[sfx]["ratio_cal"]
-    for sfx, *_ in GENERATIONS:
-        compact[f"per_line_breaches{sfx}"] = gens[sfx]["breaches"]
-    compact["spark_witness_factor"] = round(spark_witness / SPARK_WITNESS_PIN, 3)
-    compact["host_mode"] = _host_mode(cal, mc, spark_witness)
-    compact["stage_evidence"] = stage_compact
-    compact["breach_verdicts"] = breach_verdicts
-    if normal_ratios:
-        compact["normal_window_ratios"] = normal_ratios
-    if retry_factor is not None:
-        compact["normal_window_retry_factor"] = retry_factor
-    compact["actionable_breaches"] = actionable
-
-    # Seed/refresh the at-pin history: a run whose engine witness read
-    # at pin records EVERY line's raw ratio, so future slow-window runs
-    # have a carry-forward corroboration source per line. The kept
-    # entry is the BEST at-pin reading for the line's current source
-    # (merge_history_entry): the corroboration question is "can this
-    # plan run at pin?", and any at-pin window that showed it can
-    # answers yes — keeping the LATEST instead made the answer hostage
-    # to single-window noise (round 11: one excursion window wrote
-    # 1.36/1.47 over four in-band windows' 1.2-1.27, and every later
-    # slow-window run would have escalated host_priced to plan_work on
-    # that one outlier). A genuinely slowed plan has a changed source
-    # fingerprint, which drops the old entry entirely.
-    if sf == "0.1" and _sw_factor_pre <= AT_PIN_FACTOR:
-        hist = load_normal_history()
-        for _sfx, names, baseline, _c in GENERATIONS:
-            for n in names:
-                if n in baseline and n in gens[_sfx]["timings"]:
-                    new = {
-                        "raw_ratio": round(gens[_sfx]["timings"][n] / baseline[n], 2),
-                        "hf": gens[_sfx]["host_factor"],
-                        "sw_factor": round(_sw_factor_pre, 3),
-                        "ts": int(time.time()),
-                        "src_md5": _query_src_md5(n),
-                    }
-                    hist[n] = merge_history_entry(hist.get(n), new)
-        try:
-            with open(HISTORY_PATH, "w") as f:
-                json.dump(hist, f, indent=1, sort_keys=True)
-        except OSError:
-            pass  # history is an optimization; never fail the record
-    compact["sf"] = float(sf) if sf.replace(".", "").isdigit() else sf
-    full = dict(
-        compact,
-        stage_evidence_full=stage_full,
-        jit_retimes=jit_retimes,
-        # per-line retry noise witness (VERDICT r10 #3) — full record
-        # only; the compact line carries the adjudicating ratios
-        normal_window_retry_spread=retry_spread,
-        **{
-            f"host_factor_vs_baseline{sfx}": gens[sfx]["host_factor"]
-            for sfx, *_ in GENERATIONS
-        },
-        **{f"ratios{sfx}": gens[sfx]["ratios"] for sfx, *_ in GENERATIONS},
-    )
-    line = shed_to_fit(compact)
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json"), "w") as f:
-        json.dump(full, f, indent=1)
-    print(json.dumps(full), file=sys.stderr)
-    print(line)
+    print(contract_line(timings, float(sf) if sf.replace(".", "").isdigit() else sf))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--time-one":
-        time_one(sys.argv[2])
-    else:
-        main()
+    main()

@@ -41,4 +41,12 @@ print(f"{len(os_) - len(bad)}/{len(os_)} oracle hash-matches")
 if bad:
     raise SystemExit(f"MISMATCH: {bad}")
 PY
-timeout 550 python bench.py
+# bench.py's last stdout line is the driver contract: one JSON object
+# carrying metric/value/unit/queries/sf
+timeout 550 python bench.py | tail -n 1 | python -c '
+import json, sys
+line = json.loads(sys.stdin.read())
+missing = {"metric", "value", "unit", "queries", "sf"} - line.keys()
+assert not missing, f"bench line lacks {sorted(missing)}"
+print("bench:", line["metric"], "=", line["value"], line["unit"], "at sf", line["sf"])
+'

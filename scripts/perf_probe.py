@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Per-query optimization probe (round 12): for each named query,
 capture `.explain("formatted")` to a file and time the line with
-per-stage evidence (bench._stage_evidence — wall, executor run/cpu,
+per-stage evidence (_stage_evidence — wall, executor run/cpu,
 sched_overhead_share, per-stage shuffle bytes). One JSON line per query
 to stdout; plans to --plans-dir when given.
 
 Usage:
   python scripts/perf_probe.py [--plans-dir plans/r12 --suffix _before]
       [--repeat N] name [name ...]
-  (no names = every pinned headline line)
+  (no names = every bench.py headline key)
 """
 
 from __future__ import annotations
@@ -21,8 +21,62 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
-from bench import GENERATIONS, _stage_evidence  # noqa: E402
+from bench import GENERATIONS  # noqa: E402
+
+
+def _stage_evidence(spark, fn, sf_dir: str) -> dict:
+    """Per-stage wall/task-time evidence for a flagged line (VERDICT r07
+    #2): re-run the query once and read the stages it created from the
+    AppStatusStore (populated with the UI disabled). The adjudicating
+    number is sched_overhead_share = 1 − (Σ executorRunTime / 32) /
+    wall: near 1 means the line's wall is scheduler/launch latency
+    (host-priced — many tiny stages), near 0 means executors were busy
+    the whole time (a genuinely compute-bound plan, where a breach
+    would indict the plan itself)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    empty = sc._jvm.java.util.ArrayList()
+
+    def _stages():
+        dflt = lambda n: getattr(store, f"stageList$default${n}")()  # noqa: E731
+        lst = store.stageList(empty, dflt(2), dflt(3), dflt(4), dflt(5))
+        return [lst.apply(i) for i in range(lst.size())]
+
+    before = max((s.stageId() for s in _stages()), default=-1)
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    spark.catalog.clearCache()
+    rows = []
+    for s in _stages():
+        if s.stageId() <= before:
+            continue
+        rows.append(
+            {
+                "stage": s.stageId(),
+                "name": str(s.name())[:72],
+                "tasks": s.numTasks(),
+                "run_ms": int(s.executorRunTime()),
+                "cpu_ms": round(s.executorCpuTime() / 1e6, 1),
+                "shuffle_read_mb": round(s.shuffleReadBytes() / 1e6, 3),
+                "shuffle_write_mb": round(s.shuffleWriteBytes() / 1e6, 3),
+            }
+        )
+    rows.sort(key=lambda d: -d["run_ms"])
+    run_total = sum(d["run_ms"] for d in rows) / 1000.0
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return {
+        "wall_sec": round(wall, 3),
+        "n_stages": len(rows),
+        "n_tasks": sum(d["tasks"] for d in rows),
+        "executor_run_sec": round(run_total, 3),
+        "executor_cpu_sec": round(sum(d["cpu_ms"] for d in rows) / 1000.0, 3),
+        "ideal_parallel_sec": round(run_total / cpus, 3),
+        "sched_overhead_share": round(max(0.0, 1 - (run_total / cpus) / wall), 3)
+        if wall > 0
+        else None,
+        "stages": rows[:15],
+    }
 
 
 def main() -> None:
@@ -39,10 +93,7 @@ def main() -> None:
     from uforwarder_spark.registry import QUERIES
     from uforwarder_spark.session import get_spark
 
-    names = args.names or [
-        n for _sfx, hl, _b, _c in GENERATIONS for n in hl
-    ]
-    pins = {n: b[n] for _sfx, _hl, b, _c in GENERATIONS for n in b}
+    names = args.names or [n for _sfx, hl in GENERATIONS for n in hl]
 
     spark = get_spark("uforwarder-perf-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,11 +134,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         out = {
             "name": name,
-            "pin": pins.get(name),
             "wall_sec": best.get("wall_sec"),
-            "ratio_raw": round(best["wall_sec"] / pins[name], 3)
-            if name in pins and best.get("wall_sec") is not None
-            else None,
             "sched_overhead_share": best.get("sched_overhead_share"),
             "n_stages": best.get("n_stages"),
             "n_tasks": best.get("n_tasks"),

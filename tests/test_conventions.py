@@ -233,3 +233,20 @@ def test_constant_tables_go_through_local_table():
         if "createDataFrame(" in line
     ]
     assert not hits, hits
+
+
+def test_env_options_inventory():
+    """The package reads exactly three environment options: the session
+    sizing pair and the hot-key segment count, which has a measured
+    crossover (docs/SCALE.md). A new SPARK_GRAFT_* switch is a new
+    untested code path, so it has to be added here on purpose."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(uforwarder_spark.__file__).parent
+    names = {
+        m
+        for p in root.rglob("*.py")
+        for m in re.findall(r"SPARK_GRAFT_([A-Z_]+)", p.read_text())
+    }
+    assert names == {"CPUS", "DRIVER_MEM", "HOTKEY_SEGMENTS"}

@@ -1979,75 +1979,24 @@ def _parametrize_parity_sfs():
     )
 
 
-@_parametrize_parity_sfs()
-def test_es_rolling_kernel_equivalence(spark, sf_dir):
-    """D73 100 TB lever (VERDICT r07 #3): the O(n) rolling-hash window
-    kernel behind SPARK_GRAFT_ES_ROLLING must produce the IDENTICAL
-    exact_substring_dedup output as the default O(n·W) md5-explode
-    kernel at both parity SFs — fingerprint values differ, but the
-    duplicated-position set (the only thing downstream consumes) and
-    therefore every span/stat row must be equal."""
-    import os
-
-    from uforwarder_spark.operators.dedup import ES_ROLLING_FLAG, exact_substring_dedup
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    assert os.environ.get(ES_ROLLING_FLAG) not in ("1", "2")
-    base = rows(exact_substring_dedup(spark, sf_dir))
-    for mode in ("1", "2"):  # "2" = the dual-base 128-bit collision guard
-        os.environ[ES_ROLLING_FLAG] = mode
-        try:
-            rolled = rows(exact_substring_dedup(spark, sf_dir))
-        finally:
-            del os.environ[ES_ROLLING_FLAG]
-        assert base == rolled, f"kernel mode {mode} diverged from md5 kernel"
-    assert any(r[4] > 0 for r in base)  # non-vacuous: some dup tokens exist
-
-
 def test_es_state_kernel_guard(spark):
-    """ADVICE r08: persisted exact-substring window-hash state written
-    under one kernel must FAIL FAST when read under another — the guard
-    keys off the hash format (md5 = 32 hex, rolling = 'r'+16, dual =
-    'd'+32). Matched-format state passes through value-identical;
-    mismatched state raises at scan time."""
-    import os
-
-    from uforwarder_spark.operators.dedup import (
-        ES_ROLLING_FLAG,
-        es_current_kernel,
-        es_state_kernel_guard,
-    )
-
-    assert os.environ.get(ES_ROLLING_FLAG) not in ("1", "2")
-    assert es_current_kernel() == "md5"
-    md5_state = spark.createDataFrame(
-        [("a" * 32,), ("0123456789abcdef0123456789abcdef",)], "h string"
-    )
-    rolling_state = spark.createDataFrame([("r" + "b" * 16,)], "h string")
-
-    # Matched kernel: rows pass through unchanged.
-    got = sorted(r.h for r in es_state_kernel_guard(md5_state).collect())
-    assert got == sorted(["a" * 32, "0123456789abcdef0123456789abcdef"])
-
-    # Mismatched kernel (rolling-format state under the md5 kernel):
-    # the scan itself raises, naming both kernels.
+    """ADVICE r08: persisted exact-substring window-hash state is read
+    through a format guard (md5 = 32 hex). md5 state passes through
+    value-identical; state in the rolling-hash formats of older builds
+    ('r'+16 hex, 'd'+32 hex) raises at scan time."""
     import pytest
 
-    with pytest.raises(Exception, match="kernel mismatch"):
-        es_state_kernel_guard(rolling_state).collect()
+    from uforwarder_spark.operators.dedup import es_state_kernel_guard
 
-    # And the flip side: md5 state under the rolling kernel.
-    os.environ[ES_ROLLING_FLAG] = "1"
-    try:
-        assert es_current_kernel() == "rolling"
+    md5_rows = ["a" * 32, "0123456789abcdef0123456789abcdef"]
+    md5_state = spark.createDataFrame([(h,) for h in md5_rows], "h string")
+    got = sorted(r.h for r in es_state_kernel_guard(md5_state).collect())
+    assert got == sorted(md5_rows)
+
+    for old in ("r" + "b" * 16, "d" + "b" * 32):
+        state = spark.createDataFrame([(old,)], "h string")
         with pytest.raises(Exception, match="kernel mismatch"):
-            es_state_kernel_guard(md5_state).collect()
-        got = [r.h for r in es_state_kernel_guard(rolling_state).collect()]
-        assert got == ["r" + "b" * 16]
-    finally:
-        del os.environ[ES_ROLLING_FLAG]
+            es_state_kernel_guard(state).collect()
 
 
 def test_audio_signed_vs_unsigned_divergence():
@@ -2326,69 +2275,6 @@ def test_pipeline_health_taxonomy_equals_python_replay(spark):
             else "HEALTHY"
         )
         assert r.health == want, key
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    n_extra=st.integers(0, 120),
-    vocab=st.integers(1, 9),
-    seed=st.integers(0, 10**6),
-)
-def test_es_rolling_hash_matches_naive_polynomial(n_extra, vocab, seed):
-    """D73 rolling-kernel math property: for random token sequences
-    (including the n == W edge), the vectorized invertible-base prefix
-    formulation equals a direct O(n·W) polynomial evaluation at every
-    window position, and equal 50-gram contents hash equal."""
-    import hashlib
-    import random
-
-    import numpy as np
-
-    from uforwarder_spark.operators.dedup import ES_W
-
-    rng = random.Random(seed)
-    n = ES_W + n_extra
-    toks = [f"t{rng.randrange(vocab)}" for _ in range(n)]
-
-    B = 1099511628211
-    MOD = 1 << 64
-    POW_W1 = np.uint64(pow(B, ES_W - 1, MOD))
-    BINV = np.uint64(pow(B, -1, MOD))
-    BU = np.uint64(B)
-    th = np.fromiter(
-        (
-            int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big")
-            for t in toks
-        ),
-        dtype=np.uint64,
-        count=n,
-    )
-    with np.errstate(over="ignore"):
-        invpow = np.empty(n, dtype=np.uint64)
-        invpow[0] = 1
-        if n > 1:
-            np.cumprod(np.full(n - 1, BINV, dtype=np.uint64), out=invpow[1:])
-        pref = np.zeros(n + 1, dtype=np.uint64)
-        np.cumsum(th * invpow, out=pref[1:])
-        bp = np.empty(n - ES_W + 1, dtype=np.uint64)
-        bp[0] = 1
-        if n - ES_W > 0:
-            np.cumprod(np.full(n - ES_W, BU, dtype=np.uint64), out=bp[1:])
-        hs = (pref[ES_W:] - pref[: n - ES_W + 1]) * POW_W1 * bp
-
-    def naive(p):
-        h = 0
-        for j in range(ES_W):
-            h = (h * B + int(th[p + j])) % MOD
-        return h
-
-    grams = {}
-    for p in range(n - ES_W + 1):
-        assert int(hs[p]) == naive(p), p
-        g = tuple(toks[p : p + ES_W])
-        if g in grams:
-            assert hs[p] == grams[g]  # equal contents -> equal fingerprint
-        grams[g] = hs[p]
 
 
 def _bpe_reference_train(freq, steps):

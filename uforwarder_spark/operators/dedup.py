@@ -1642,11 +1642,11 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per partition). Duplicated positions (join survivors only) pay
     the per-doc island windows, partitioned by doc_id. The W-times
     hashing constant in the window map is the honest cost of staying
-    JVM-side/declarative; at 100 TB swap the inner map for an O(n)
-    polynomial rolling hash (mapInPandas, Arrow-batched) with the
-    identical downstream plan — the shuffle shape, which is what
-    scale-limits this operator, does not change. No suffix array, no
-    all-pairs, no driver-side state.
+    JVM-side/declarative; an O(n) polynomial rolling hash
+    (mapInPandas, Arrow-batched) measured within noise of it at every
+    tested size (docs/SCALE.md round 8) — the shuffle shape, not
+    window hashing, is what scale-limits this operator. No suffix
+    array, no all-pairs, no driver-side state.
 
     Reference analogue: none — training-data dedup family
     (SURVEY §2 D; Lee et al. 2022 exact-substring rule)."""
@@ -1669,46 +1669,14 @@ def es_token_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-ES_ROLLING_FLAG = "SPARK_GRAFT_ES_ROLLING"
-
-
 def es_window_frame(t: DataFrame) -> DataFrame:
     """(doc_id, p, h): one window fingerprint per token position — the
-    exact-substring signature stream. At 100 TB the existing-corpus
-    output of this frame is a persisted DISTINCT-hash table updated per
-    ingest, not recomputed (the D36 band-table convention).
-
-    Three kernels, selected by the {ES_ROLLING_FLAG} env var (read at
-    call time so one process can compare all of them):
-    - default: declarative JVM-side map — md5 of the joined W-gram per
-      position, O(n·W) re-hashing but zero Python (the oracle twin).
-    - "1": O(n) polynomial rolling hash over per-token fingerprints
-      (Arrow-batched mapInPandas) — the 100 TB path, where the W×
-      re-hash constant dominates the window stage. Fingerprint VALUES
-      differ from md5, but within a run every call site sees the same
-      kernel, and the duplicated-position SET — the only thing
-      downstream consumes — is identical (equality test at both SFs:
-      tests/test_properties.py::test_es_rolling_kernel_equivalence).
-    - "2": the 128-bit collision guard docs/SCALE.md prescribes for
-      real 100 TB (~10^13 windows): TWO independent 64-bit rolling
-      fingerprints (independent bases AND independent per-token md5
-      halves) computed in the SAME single pass, emitted as one joint
-      33-char key so every downstream group-by/join keys on both at
-      once. Same O(n), same plans; collision probability ~2^-128-ish
-      per pair instead of 2^-64.
-    Downstream plans (the group-by/join shuffle shape that actually
-    scale-limits D73/D74/D78/E33) are identical either way.
-
-    Kernel identity is ENCODED IN THE HASH FORMAT (md5 = 32 hex;
-    rolling = 'r' + 16 hex; dual = 'd' + 32 hex), so persisted
-    DISTINCT-hash state tables (the D36 convention D74/E33 build on)
-    carry their kernel with them — `es_state_kernel_guard` fails fast
-    on a flag/state mismatch instead of silently matching nothing."""
-    import os
-
-    mode = os.environ.get(ES_ROLLING_FLAG)
-    if mode in ("1", "2"):
-        return _es_window_frame_rolling(t, dual=mode == "2")
+    exact-substring signature stream. h is the md5 (32 hex) of the
+    joined W-gram, a declarative JVM-side map with zero Python (the
+    oracle twin). At 100 TB the existing-corpus output of this frame is
+    a persisted DISTINCT-hash table updated per ingest, not recomputed
+    (the D36 band-table convention); `es_state_kernel_guard` checks
+    that table's hash format when it is read back."""
     return t.select(
         "doc_id",
         F.explode(
@@ -1720,132 +1688,28 @@ def es_window_frame(t: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("w.p").alias("p"), F.col("w.h").alias("h"))
 
 
-def _es_window_frame_rolling(t: DataFrame, dual: bool = False) -> DataFrame:
-    """O(n) rolling-hash kernel behind {ES_ROLLING_FLAG}: per doc, one
-    64-bit polynomial fingerprint per window position computed in a
-    single pass (Rabin-Karp over per-token md5-low-8-byte values, base
-    = the odd FNV prime so B is invertible mod 2^64 and the whole
-    window sweep vectorizes: H(p) = (pref[p+W] − pref[p])·B^{{W-1}}·B^p
-    with pref the B^{{-i}}-weighted prefix sum, everything wrapping in
-    uint64). Cost per doc: n small-string hashes + O(n) vector ops —
-    no W× re-hash. Emitted as a 17-hex-char string so the column stays
-    drop-in schema-compatible with the md5 kernel (downstream group-by
-    / join / DISTINCT plans are typed string either way).
-
-    dual=True is the implemented 128-bit collision guard: a SECOND
-    64-bit sweep in the same pass with an independent base (Knuth's
-    MMIX LCG multiplier, odd ⇒ invertible mod 2^64) over the OTHER
-    md5 half (bytes 8:16) of each token — the per-token md5 is computed
-    once, both sweeps are O(n) numpy, and the joint key 'd' + hex(h1)
-    + hex(h2) makes every downstream DISTINCT/join/group-by condition
-    on both fingerprints simultaneously. A pair collides only if two
-    different windows collide under BOTH independent sketches."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    MOD = 1 << 64
-    BASES = [1099511628211]  # odd FNV prime ⇒ invertible mod 2^64
-    if dual:
-        BASES.append(6364136223846793005)  # Knuth MMIX multiplier (odd)
-    PARAMS = [
-        (
-            np.uint64(pow(b, ES_W - 1, MOD)),
-            np.uint64(pow(b, -1, MOD)),
-            np.uint64(b),
-        )
-        for b in BASES
-    ]
-    prefix = "d" if dual else "r"
-
-    def roll(batches):
-        def sweep(th, n, pw1, binv, bu):
-            invpow = np.empty(n, dtype=np.uint64)
-            invpow[0] = 1
-            np.cumprod(np.full(n - 1, binv, dtype=np.uint64), out=invpow[1:])
-            pref = np.zeros(n + 1, dtype=np.uint64)
-            np.cumsum(th * invpow, out=pref[1:])
-            bp = np.empty(n - ES_W + 1, dtype=np.uint64)
-            bp[0] = 1
-            if n - ES_W > 0:
-                np.cumprod(np.full(n - ES_W, bu, dtype=np.uint64), out=bp[1:])
-            return (pref[ES_W:] - pref[: n - ES_W + 1]) * pw1 * bp
-
-        for pdf in batches:
-            out = {"doc_id": [], "p": [], "h": []}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["toks"]):
-                n = len(toks)
-                if n < ES_W:
-                    continue
-                digs = [hashlib.md5(tok.encode("utf-8")).digest() for tok in toks]
-                ths = [
-                    np.fromiter(
-                        (int.from_bytes(d[8 * k : 8 * k + 8], "big") for d in digs),
-                        dtype=np.uint64,
-                        count=n,
-                    )
-                    for k in range(len(PARAMS))
-                ]
-                with np.errstate(over="ignore"):
-                    sweeps = [
-                        sweep(th, n, *params) for th, params in zip(ths, PARAMS)
-                    ]
-                m = n - ES_W + 1
-                out["doc_id"].extend([doc_id] * m)
-                out["p"].extend(range(m))
-                if dual:
-                    out["h"].extend(
-                        f"d{a:016x}{b:016x}" for a, b in zip(sweeps[0], sweeps[1])
-                    )
-                else:
-                    out["h"].extend(f"r{x:016x}" for x in sweeps[0])
-            yield pd.DataFrame(out, columns=["doc_id", "p", "h"])
-
-    return t.select("doc_id", "toks").mapInPandas(
-        roll, schema="doc_id long, p long, h string"
-    )
-
-
-# Kernel identity, encoded in the hash format itself — the guard the
-# D36 persisted-state convention needs when the kernel flag can change
-# between ingests (ADVICE r08): persisted window-hash state written
-# under one kernel silently matches NOTHING under another, so the gate
-# fails fast instead.
-ES_KERNEL_PATTERNS = {
-    "md5": "^[0-9a-f]{32}$",
-    "rolling": "^r[0-9a-f]{16}$",
-    "dual": "^d[0-9a-f]{32}$",
-}
-
-
-def es_current_kernel() -> str:
-    import os
-
-    return {None: "md5", "": "md5", "1": "rolling", "2": "dual"}.get(
-        os.environ.get(ES_ROLLING_FLAG), "md5"
-    )
+# The window-hash format, checked on persisted state: state written in
+# any other format (older builds' 'r'/'d'-prefixed rolling-hash
+# fingerprints) silently matches NOTHING, so the gate fails fast instead.
+ES_HASH_PATTERN = "^[0-9a-f]{32}$"
 
 
 def es_state_kernel_guard(ex_h: DataFrame) -> DataFrame:
     """Wrap a persisted existing-corpus window-hash frame so that any
-    row whose format does not match the CURRENT kernel raises at scan
-    time (executor-side `raise_error` inside the projection — fail-fast
-    on the first mismatched row, zero extra pass, no driver action).
-    Every D74/E33-style ingest gate reads its state through this, so
-    flipping {ES_ROLLING_FLAG} between ingests is a hard error, never a
-    silent zero-overlap run."""
-    kern = es_current_kernel()
-    pat = ES_KERNEL_PATTERNS[kern]
+    row whose h is not an md5 fingerprint raises at scan time
+    (executor-side `raise_error` inside the projection — fail-fast on
+    the first mismatched row, zero extra pass, no driver action). Every
+    D74/E33-style ingest gate reads its state through this, so state
+    from another kernel is a hard error, never a silent zero-overlap
+    run."""
     return ex_h.withColumn(
         "h",
-        F.when(F.col("h").rlike(pat), F.col("h")).otherwise(
+        F.when(F.col("h").rlike(ES_HASH_PATTERN), F.col("h")).otherwise(
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"exact-substring state kernel mismatch: current kernel "
-                        f"is '{kern}' ({ES_ROLLING_FLAG} convention) but "
-                        f"persisted state row has h="
+                        "exact-substring state kernel mismatch: current kernel "
+                        "is 'md5' but persisted state row has h="
                     ),
                     F.col("h"),
                     F.lit(" — rebuild the state table under the current kernel"),
@@ -1959,8 +1823,8 @@ def incr_substring_frame(t_in: DataFrame, ex_h: DataFrame) -> DataFrame:
     existing-corpus DISTINCT window-hash table — shared by batch D74
     and the live E33 ingest gate. The state side passes through
     `es_state_kernel_guard`, so state persisted under a different
-    {ES_ROLLING_FLAG} kernel fails fast at scan time instead of
-    silently matching nothing (ADVICE r08)."""
+    kernel fails fast at scan time instead of silently matching
+    nothing (ADVICE r08)."""
     pos = (
         es_window_frame(t_in)
         .join(es_state_kernel_guard(ex_h), "h", "leftsemi")

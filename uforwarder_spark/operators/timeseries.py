@@ -441,8 +441,8 @@ def markov_pairs_frame(events: DataFrame, segments: int | None = None) -> DataFr
     `segment_by_span` for the shared invariants), so per-segment
     (ts, event_id) order concatenates to the global order, and
     lead-over-nonempty-segments skips empty ranges.  Values are
-    flag-independent (equality-tested), so unlike ES_ROLLING there is
-    no persisted-state kernel-identity concern."""
+    flag-independent (equality-tested), so state persisted under one
+    segment count stays valid under another."""
     from pyspark.sql import Window
 
     from .skew import hotkey_segments, segment_by_span
