@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Breadth sweep: run EVERY registered query once (noop sink) and print
-per-query wall plus the total — the whole-surface cost, not just the 12
+per-query wall plus the total — the whole-surface cost, not just the 46
 headline queries bench.py times. Usage:
 
     python scripts/bench_all.py [sf_dir]

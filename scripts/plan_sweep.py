@@ -2,7 +2,7 @@
 """All-keys plan sweep: capture explain("formatted") metrics for every
 declared query (plan_metrics.metrics) and write one JSON summary.
 
-Usage: python scripts/plan_sweep.py [--out plans/r13/plan_sweep_all_keys.json]
+Usage: python scripts/plan_sweep.py [--out plans/plan_sweep_all_keys.json]
 
 Reads the SF dir from $SPARK_GRAFT_SF_DIR (default sf0.001 — plans are
 shape-stable across SFs and the sweep only needs the cheapest one);

@@ -236,10 +236,10 @@ def test_constant_tables_go_through_local_table():
 
 
 def test_env_options_inventory():
-    """The package reads exactly three environment options: the session
-    sizing pair and the hot-key segment count, which has a measured
-    crossover (docs/SCALE.md). A new SPARK_GRAFT_* switch is a new
-    untested code path, so it has to be added here on purpose."""
+    """The package reads exactly two environment options: the session
+    sizing pair. No environment variable selects a code path. A new
+    SPARK_GRAFT_* switch is a new untested code path, so it has to be
+    added here on purpose."""
     import pathlib
     import re
 
@@ -249,4 +249,4 @@ def test_env_options_inventory():
         for p in root.rglob("*.py")
         for m in re.findall(r"SPARK_GRAFT_([A-Z_]+)", p.read_text())
     }
-    assert names == {"CPUS", "DRIVER_MEM", "HOTKEY_SEGMENTS"}
+    assert names == {"CPUS", "DRIVER_MEM"}

@@ -127,36 +127,6 @@ def test_rendezvous_minimal_movement_on_worker_loss(spark):
             assert after[key].assigned_worker in ("w0", "w1")
 
 
-# --- skew: salted aggregation ---------------------------------------------
-def test_salted_agg_matches_plain_agg(spark):
-    from uforwarder_spark.operators.skew import salted_agg
-
-    # hot key: 10k rows on one key, a handful elsewhere
-    rows = [("hot", i % 7, float(i % 100)) for i in range(10_000)]
-    rows += [("cold", i, float(i)) for i in range(5)]
-    df = spark.createDataFrame(rows, ["k", "sub", "val"])
-    got = salted_agg(
-        df,
-        ["k"],
-        {
-            "n": ("count", "*"),
-            "total": ("sum", "val"),
-            "lo": ("min", "val"),
-            "hi": ("max", "val"),
-        },
-        n_salts=8,
-    )
-    plain = df.groupBy("k").agg(
-        F.count("*").alias("n"),
-        F.sum("val").alias("total"),
-        F.min("val").alias("lo"),
-        F.max("val").alias("hi"),
-    )
-    g = {r.k: (r.n, r.total, r.lo, r.hi) for r in got.collect()}
-    p = {r.k: (r.n, r.total, r.lo, r.hi) for r in plain.collect()}
-    assert g == p
-
-
 # --- multimodal batch plumbing --------------------------------------------
 def test_multimodal_decode_batch_shape(spark):
     from uforwarder_spark.functions.multimodal import multimodal_meta

@@ -349,6 +349,42 @@ def test_phash_dedup_payload_stays_in_map_stage(spark):
         assert "payload" not in m.group(1)
 
 
+def test_phash_dedup_kernel_runs_once(spark):
+    # D64 ordering invariant: ph persists lazily and g's EAGER
+    # localCheckpoint is ph's only consumer when it runs, so that one
+    # job fills ph's whole cache. The final action must then read ph
+    # from the cache and never run the Arrow phash kernel again. Breaks
+    # if ph's persist() is dropped, or if g is left unmaterialized or
+    # only lazily persisted at build time.
+    from uforwarder_spark.functions.multimodal import multimodal_phash_dedup
+
+    def nodes(plan):
+        out = [plan]
+        for i in range(plan.children().size()):
+            out += nodes(plan.children().apply(i))
+        return out
+
+    def kernel_rows(cached_plan):
+        (k,) = [n for n in nodes(cached_plan) if n.nodeName() == "MapInPandas"]
+        return k.metrics().apply("pythonNumRowsReceived").value()
+
+    spark.catalog.clearCache()  # an earlier test's ph entry would be reused
+    df = multimodal_phash_dedup(spark, SF_SMALL)
+    ph = [
+        n.cacheBuilder()
+        for n in nodes(df._jdf.queryExecution().optimizedPlan())
+        if n.nodeName() == "InMemoryRelation"
+        and "MapInPandas" in n.cacheBuilder().cachedPlan().toString()
+    ]
+    assert ph, "the fingerprint frame is not cached"
+    assert all(b.isCachedColumnBuffersLoaded() for b in ph)
+    filled = [kernel_rows(b.cachedPlan()) for b in ph]
+    n = len(df.collect())
+    assert n > 0
+    assert [kernel_rows(b.cachedPlan()) for b in ph] == filled == [n] * len(ph)
+    spark.catalog.clearCache()
+
+
 def test_phash_incremental_payload_stays_local_and_no_self_join(spark):
     # D65: payloads never enter an exchange; the only joins are the
     # asymmetric incoming-x-corpus band probe and the decision joins —

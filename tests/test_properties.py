@@ -2605,37 +2605,21 @@ def test_unigram_lm_synthetic_corpora(spark):
             assert got[p] == (kept[p], lp[p]), (words, p, got[p], (kept[p], lp[p]))
 
 
-def test_markov_segment_and_carry_equals_default(spark):
-    """D91 hot-key fallback (SCALE.md round 9): segment-and-carry must
-    be VALUE-IDENTICAL to the single-window path — on real sf0.001
-    events for several K, and on a synthetic hot frame (one user owning
-    ~99% of rows, duplicate timestamps every 3 events so equal-ts
-    ordering and segment assignment interact) against a pure-Python
-    adjacency count. Also asserts the decomposition actually splits the
-    hot sort: the within-segment window partitions by (user_id, seg)."""
-    import json
+def test_markov_pairs_frame_hot_key_equals_python(spark):
+    """D91 adjacency on a hot-key frame: one user owns ~99% of rows,
+    with duplicate timestamps every 3 events so equal-ts ordering
+    (broken by event_id) matters. The transition counts must equal a
+    pure-Python adjacency count under (ts, event_id) order."""
     from collections import Counter
 
     from pyspark.sql import functions as F
 
-    from uforwarder_spark.model import load_table
     from uforwarder_spark.operators.timeseries import markov_pairs_frame
-
-    import os
-
-    from tests.conftest import SF_SMALL
 
     def cnts(df):
         return sorted(
             map(tuple, df.groupBy("event_from", "event_to").count().collect())
         )
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    base = cnts(markov_pairs_frame(ev))
-    for k in (2, 5, 32):
-        assert cnts(markov_pairs_frame(ev, segments=k)) == base, k
 
     rows, eid = [], 0
     for i in range(900):
@@ -2661,57 +2645,24 @@ def test_markov_segment_and_carry_equals_default(spark):
             c[(seq[i][2], seq[i + 1][2])] += 1
     py = sorted((f, t, n) for (f, t), n in c.items())
     assert cnts(markov_pairs_frame(hot)) == py
-    for k in (4, 7):
-        assert cnts(markov_pairs_frame(hot, segments=k)) == py, k
-
-    # the env flag drives the same path (read once per call, values
-    # identical) — and the within-segment window is keyed (user_id, seg)
-    os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"] = "4"
-    try:
-        seg_df = markov_pairs_frame(hot)
-        assert cnts(seg_df) == py
-        nodes = json.loads(seg_df._jdf.queryExecution().optimizedPlan().toJSON())
-        keyed = []
-        for n in nodes:
-            if n.get("class", "").endswith("logical.Window"):
-                keys = [
-                    en.get("name")
-                    for tree in (n.get("partitionSpec") or [])
-                    for en in tree
-                    if en.get("class", "").endswith("AttributeReference")
-                ]
-                keyed.append(keys)
-        assert any(
-            "user_id" in ks and "seg" in ks for ks in keyed
-        ), f"hot sort not split: {keyed}"
-    finally:
-        del os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"]
 
 
-def test_sessions_segment_and_carry_equals_default(spark):
-    """C10 hot-key fallback (SCALE.md round 9): the island-merge seam —
-    unlike D91's one-transition carry, every downstream island id must
-    re-base. Value-identity on real sf0.001 events for several K, and
-    on a synthetic frame exercising the hard seams: a session spanning
-    MANY segments (events every 10 min across the whole span), gaps
-    exactly at/over/under the 1800 s threshold, users absent from
-    middle segments (the seam lag must skip empty ranges), and a
-    single-event user — against a pure-Python sessionizer."""
-    import os
-
+def test_sessions_frame_equals_python_sessionizer(spark):
+    """C10 session assignment against a pure-Python sessionizer on the
+    hard cases: one session spanning the whole time span (events every
+    10 min), gaps of exactly 1799 / 1800 / 1801 s, a user with no
+    events in the middle of the span, and a single-event user."""
     from collections import defaultdict
 
     from pyspark.sql import functions as F
 
-    from tests.conftest import SF_SMALL
-    from uforwarder_spark.model import load_table
     from uforwarder_spark.plans.relational import SESSION_GAP_S, sessions_frame
 
-    def sess(df, k=None):
+    def sess(df):
         return sorted(
             map(
                 tuple,
-                sessions_frame(df, segments=k)
+                sessions_frame(df)
                 .groupBy("user_id", "session_id")
                 .agg(
                     F.count("*").alias("n"),
@@ -2724,21 +2675,17 @@ def test_sessions_segment_and_carry_equals_default(spark):
             )
         )
 
-    ev = load_table(spark, SF_SMALL, "events")
-    base = sess(ev)
-    for k in (2, 5, 32):
-        assert sess(ev, k) == base, k
-
     rows, eid = [], 0
-    for i in range(200):  # one giant session spanning every segment
+    for i in range(200):  # one giant session spanning the whole span
         rows.append((1, 600 * i, eid))
         eid += 1
     for i in range(40):  # 2h gap then a second burst
         rows.append((1, 600 * 200 + 7200 + 300 * i, eid))
         eid += 1
     # threshold edges: gaps of exactly 1799 / 1800 / 1801 s — the
-    # at-threshold 1800 gap pins the seam rule's STRICT '>' (a
-    # regression to '>=' passes on 1799 and 1801 alike)
+    # at-threshold 1800 gap pins the rule's STRICT '>' (a regression
+    # to '>=' passes on 1799 and 1801 alike); user 2 then has no
+    # events across most of user 1's span
     for t in [0, 1799, 3599, 5400, 5402, 200000, 200001]:
         rows.append((2, t, eid))
         eid += 1
@@ -2761,16 +2708,7 @@ def test_sessions_segment_and_carry_equals_default(spark):
             else:
                 cur.append(nxt)
         py.append((u, sid, len(cur), cur[-1][0] - cur[0][0]))
-    py = sorted(py)
-    assert sess(df) == py
-    for k in (2, 3, 4, 7, 16):
-        assert sess(df, k) == py, k
-
-    os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"] = "4"
-    try:
-        assert sess(df) == py
-    finally:
-        del os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"]
+    assert sess(df) == sorted(py)
 
 
 def _wp_reference_train(freq, steps):
@@ -2890,19 +2828,15 @@ def test_wordpiece_apply_equals_python_replay(spark):
         assert r.fertility > 1.0
 
 
-def test_segment_by_span_null_ts_matches_default(spark):
-    """ADVICE r09 regression: `F.least` skips NULLs, so before the fix
-    a NULL-ts row landed in the LAST segment while the flag-off window
-    sort (`orderBy ts asc` = NULLs FIRST) treats it as earliest — the
-    segmented D91 path silently diverged from the default on NULL-ts
-    data. The fix pins NULL ts to segment 0; this asserts both the pin
-    and end-to-end value identity of markov_pairs_frame on a frame
-    containing NULL timestamps."""
+def test_markov_pairs_frame_null_ts_sorts_first(spark):
+    """D91 adjacency on a frame with NULL timestamps: the window sort
+    (`orderBy ts asc`) places NULL-ts rows FIRST in each user's
+    sequence. Pinned against a pure-Python count under that order
+    (NULLs first, then (ts, event_id) asc)."""
     from collections import Counter
 
     from pyspark.sql import functions as F
 
-    from uforwarder_spark.operators.skew import segment_by_span
     from uforwarder_spark.operators.timeseries import markov_pairs_frame
 
     rows = []
@@ -2919,27 +2853,12 @@ def test_segment_by_span_null_ts_matches_default(spark):
         "user_id", F.col("tsec").cast("timestamp").alias("ts"),
         "event_id", "event_type",
     )
-    segs = {
-        r.event_id: r.seg
-        for r in segment_by_span(df, 4).select("event_id", "seg").collect()
-    }
-    null_eids = [e for (_, t, e, _) in rows if t is None]
-    for e in null_eids:
-        assert segs[e] == 0, (e, segs[e])
-
-    def cnts(pairs):
-        return sorted(
-            map(
-                tuple,
-                pairs.groupBy("event_from", "event_to")
-                .count()
-                .collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            markov_pairs_frame(df).groupBy("event_from", "event_to").count().collect(),
         )
-
-    base = cnts(markov_pairs_frame(df))
-    # pure-Python check of the flag-off semantics (NULLs first, then
-    # (ts, event_id) asc) so base itself is pinned, not just compared
+    )
     byu = {}
     for u, t, e, ty in rows:
         byu.setdefault(u, []).append((t is not None, t or 0, e, ty))
@@ -2948,33 +2867,7 @@ def test_segment_by_span_null_ts_matches_default(spark):
         seq.sort()
         for i in range(len(seq) - 1):
             c[(seq[i][3], seq[i + 1][3])] += 1
-    assert base == sorted((f, t, n) for (f, t), n in c.items())
-    for k in (2, 4, 7):
-        assert cnts(markov_pairs_frame(df, segments=k)) == base, k
-
-
-def test_hotkey_segments_env_parses_defensively():
-    """Review-pass regression: SPARK_GRAFT_HOTKEY_SEGMENTS is an opt-in
-    performance flag — a malformed value must fall back to the default
-    single-window path (0), never raise at plan-build time."""
-    import os
-
-    from uforwarder_spark.operators.skew import hotkey_segments
-
-    cases = {"": 0, "8": 8, "auto": 0, "8x": 0, " ": 0, "-3": -3, "0": 0}
-    old = os.environ.get("SPARK_GRAFT_HOTKEY_SEGMENTS")
-    try:
-        for raw, want in cases.items():
-            os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"] = raw
-            assert hotkey_segments() == want, raw
-        del os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"]
-        assert hotkey_segments() == 0
-        assert hotkey_segments(3) == 3
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_HOTKEY_SEGMENTS", None)
-        else:
-            os.environ["SPARK_GRAFT_HOTKEY_SEGMENTS"] = old
+    assert got == sorted((f, t, n) for (f, t), n in c.items())
 
 
 def test_dsir_lr_literals_equal_spark_expression(spark):

@@ -1,15 +1,12 @@
 """Hot-key skew evidence (round-3 verdict item 9): uForwarder's load is
 topic-skewed by nature — one hot topic can own ~90% of the log. These
 tests build that shape explicitly (one topic = 90% of rows, one hot
-(topic, part_id) shard) and verify that
-
-1. the salted two-stage aggregation (operators/skew.salted_agg) is
-   bit-equal to the plain groupBy on the skewed input,
-2. the salt expression actually SPREADS the hot key across buckets
-   (≥ 3/4 of the salt space used, no bucket owning more than 2× fair
-   share) — the property that kills the straggler reducer,
-3. the A5 / A13 shard-keyed operators stay correct on the skewed log
-   (their hash-agg plans have no per-key sort to blow up).
+(topic, part_id) shard) and verify that the A5 / A13 shard-keyed
+operators stay correct on the skewed log (their hash-agg plans have no
+per-key sort to blow up). Two adversarial document shapes follow: a
+boilerplate cluster that AQE's skew-join must split in the MinHash
+band join, and a hot window hash that D73's partial aggregation must
+combine map-side.
 
 Wall-clock comparisons at 10× replication live in docs/SCALE.md
 ("Hot-topic skew" section); CI asserts the deterministic properties
@@ -27,7 +24,6 @@ pytestmark = pytest.mark.slow
 
 from tests.conftest import SF_SMALL
 from uforwarder_spark import model
-from uforwarder_spark.operators.skew import DEFAULT_SALTS, salted_agg
 
 
 @pytest.fixture(scope="module")
@@ -55,52 +51,6 @@ def test_skew_shape_is_as_claimed(skewed):
     total = per_key["count"].sum()
     hot_share = per_key.loc[per_key["topic"] == "hot_topic", "count"].sum() / total
     assert 0.85 <= hot_share <= 0.95
-
-
-def test_salted_agg_equals_plain_on_skewed(skewed):
-    plain = (
-        skewed.groupBy("topic", "part_id")
-        .agg(
-            F.count("*").alias("n_msgs"),
-            F.sum("size_bytes").alias("total_bytes"),
-            F.min("msg_offset").alias("lo"),
-            F.max("msg_offset").alias("hi"),
-        )
-        .toPandas()
-        .sort_values(["topic", "part_id"])
-        .reset_index(drop=True)
-    )
-    salted = (
-        salted_agg(
-            skewed,
-            ["topic", "part_id"],
-            {
-                "n_msgs": ("count", "*"),
-                "total_bytes": ("sum", "size_bytes"),
-                "lo": ("min", "msg_offset"),
-                "hi": ("max", "msg_offset"),
-            },
-        )
-        .toPandas()
-        .sort_values(["topic", "part_id"])
-        .reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(plain, salted, check_dtype=False)
-
-
-def test_salt_spreads_hot_key(skewed):
-    """The helper's salt (hash of every column) must divide the hot
-    shard's rows across reducers: ≥ 3/4 of the salt space occupied and
-    no bucket over 2× fair share — otherwise the two-stage rewrite still
-    has a straggler."""
-    hot = skewed.filter("topic = 'hot_topic'")
-    salt = F.pmod(F.hash(*[F.col(c) for c in hot.columns]), F.lit(DEFAULT_SALTS))
-    dist = hot.groupBy(salt.alias("salt")).count().toPandas()
-    n_hot = dist["count"].sum()
-    assert len(dist) >= DEFAULT_SALTS * 3 // 4
-    assert dist["count"].max() <= 2 * n_hot / DEFAULT_SALTS
 
 
 def test_a5_a13_correct_on_skewed_log(skewed, spark):

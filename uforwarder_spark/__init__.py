@@ -23,7 +23,6 @@ from .operators import dedup  # noqa: F401
 from .functions import multimodal, text  # noqa: F401
 from .operators import liveness  # noqa: F401
 from .operators import ratelimit  # noqa: F401
-from .operators import skew  # noqa: F401
 from .operators import timeseries  # noqa: F401
 from .sources import bucketing, readers  # noqa: F401
 from .streaming import pipelines  # noqa: F401

@@ -2569,11 +2569,10 @@ def domain_dedup_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-domain row count is bounded by that domain's distinct URLs,
     not its crawl count (re-fetches collapse before the window). At
     100 TB a pathological domain (a crawler trap emitting unbounded
-    distinct URLs) would hot-key the window partition — the published
-    mitigation is the same two-level shape: pre-aggregate per
-    (domain, url-bucket), cap within buckets, then merge bucket
-    survivors; the segment-and-carry machinery in operators/skew.py is
-    the implemented fallback for exactly this class.
+    distinct URLs) would hot-key the window partition, and no fallback
+    for that case is implemented. The published mitigation is the
+    same two-level shape: pre-aggregate per (domain, url-bucket), cap
+    within buckets, then merge bucket survivors.
 
     Reference analogue: none (training-data pipeline family; published
     rule per the FineWeb/RefinedWeb curation recipes — PAPERS.md)."""

@@ -419,68 +419,19 @@ FROM cnt c JOIN tot t USING (event_from)
 """
 
 
-def markov_pairs_frame(events: DataFrame, segments: int | None = None) -> DataFrame:
+def markov_pairs_frame(events: DataFrame) -> DataFrame:
     """Adjacency half of D91, shared with live E45: the (event_from,
     event_to) transition stream of a (user_id, ts, event_id,
     event_type) frame — one lead window per user, ordered by
-    (ts, event_id) so equal timestamps break on the unique id.
-
-    Hot-key fallback (``SPARK_GRAFT_HOTKEY_SEGMENTS=K`` or the
-    ``segments`` arg, K > 1): the SEGMENT-AND-CARRY decomposition
-    docs/SCALE.md round-9 prescribes for the per-user sequential-window
-    class, where one user owning a data-sized share of events would
-    serialize the per-user sort into a single task.  The global time
-    span (a 1-row broadcast — never a per-user bounds table, which
-    would itself be |users|-sized) is cut into K contiguous ranges;
-    the lead window runs per (user_id, segment) — the hot user's sort
-    becomes K parallel tasks — and the K−1 seam transitions per user
-    are recovered from per-segment first/last rows (an O(|users|·K)
-    residue), exactly E45's carry rule with segments instead of
-    triggers.  Exact under all flag values: equal timestamps land in
-    the same segment (the range is a function of ts alone — see
-    `segment_by_span` for the shared invariants), so per-segment
-    (ts, event_id) order concatenates to the global order, and
-    lead-over-nonempty-segments skips empty ranges.  Values are
-    flag-independent (equality-tested), so state persisted under one
-    segment count stays valid under another."""
+    (ts, event_id) so equal timestamps break on the unique id."""
     from pyspark.sql import Window
 
-    from .skew import hotkey_segments, segment_by_span
-
-    if segments is None:
-        segments = hotkey_segments()
-    if segments <= 1:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return (
-            events.withColumn("event_to", F.lead("event_type").over(w))
-            .filter(F.col("event_to").isNotNull())
-            .select(F.col("event_type").alias("event_from"), "event_to")
-        )
-
-    ev = segment_by_span(
-        events.select("user_id", "ts", "event_id", "event_type"), segments
-    )
-    w_in = Window.partitionBy("user_id", "seg").orderBy("ts", "event_id")
-    within = (
-        ev.withColumn("event_to", F.lead("event_type").over(w_in))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return (
+        events.withColumn("event_to", F.lead("event_type").over(w))
         .filter(F.col("event_to").isNotNull())
         .select(F.col("event_type").alias("event_from"), "event_to")
     )
-    # (ts, event_id) is unique, so event_type never participates in the
-    # struct ordering — first_s/last_s are the true boundary rows.
-    bounds = ev.groupBy("user_id", "seg").agg(
-        F.min(F.struct("ts", "event_id", "event_type")).alias("first_s"),
-        F.max(F.struct("ts", "event_id", "event_type")).alias("last_s"),
-    )
-    w_seam = Window.partitionBy("user_id").orderBy("seg")
-    seams = (
-        bounds.withColumn(
-            "event_to", F.lead(F.col("first_s.event_type")).over(w_seam)
-        )
-        .filter(F.col("event_to").isNotNull())
-        .select(F.col("last_s.event_type").alias("event_from"), "event_to")
-    )
-    return within.unionAll(seams)
 
 
 def markov_table_from(cnt: DataFrame) -> DataFrame:
@@ -536,8 +487,9 @@ def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     live E45, which carries each user's LAST event across micro-batch
     boundaries so no transition is lost at a batch seam. A key owning
     a data-sized row share serializes the per-user window into one
-    task — `SPARK_GRAFT_HOTKEY_SEGMENTS=K` enables the equality-proven
-    segment-and-carry decomposition (docs/SCALE.md round 9).
+    task; the segment-and-carry split of that window was slower on
+    every measured workload, hot key included, and was removed
+    (docs/SCALE.md rounds 9-10).
 
     Reference analogue: none (behavioral-analytics family next to
     C10/C23/C24)."""

@@ -411,86 +411,22 @@ FROM s GROUP BY user_id, session_id
 """
 
 
-def sessions_frame(events: DataFrame, segments: int | None = None) -> DataFrame:
-    """Per-event session assignment of C10, shared with the hot-key
-    fallback: (user_id, ts, event_id, session_id) where session_id is
-    the 0-based running count of >30-min-gap starts per user under
-    (ts, event_id) order.
-
-    Hot-key fallback (``SPARK_GRAFT_HOTKEY_SEGMENTS=K`` or the
-    ``segments`` arg, K > 1): the island-merge seam the
-    segment-and-carry decomposition needs for SESSIONS (docs/SCALE.md
-    round 9 — the D91 Markov seam carries one boundary transition; the
-    session seam must also re-base every downstream island id). The
-    global time span (1-row broadcast) is cut into K contiguous
-    ranges; islands are computed per (user_id, seg) — the hot user's
-    sort becomes K parallel tasks — and the per-(user, seg) summary
-    frame (an O(|users|·K) residue) resolves each segment's SEAM START
-    (first local row opens a new session iff its gap from the previous
-    non-empty segment's last event exceeds the threshold) and PREFIX
-    OFFSET (running sum of seam starts + local starts over earlier
-    segments), which joins back on (user_id, seg) — the window's own
-    partitioning, so no extra event-sized shuffle. Exact under all
-    flag values: segment assignment is a function of ts alone (see
-    `segment_by_span` for the shared invariants), so per-segment order
-    concatenates to the global order; a session spanning any number of
-    segments (including empty ones — the seam lag skips them) chains
-    through seam_start = 0. Values are flag-independent
-    (equality-tested)."""
+def sessions_frame(events: DataFrame) -> DataFrame:
+    """Per-event session assignment of C10: (user_id, ts, event_id,
+    session_id) where session_id is the 0-based running count of
+    >30-min-gap starts per user under (ts, event_id) order."""
     from pyspark.sql import Window
 
-    from ..operators.skew import hotkey_segments, segment_by_span
-
-    if segments is None:
-        segments = hotkey_segments()
     epoch = F.expr("CAST(unix_timestamp(ts) AS BIGINT)")
-    if segments <= 1:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return (
-            events.withColumn(
-                "new_session",
-                F.when(epoch - F.lag(epoch).over(w) > SESSION_GAP_S, 1).otherwise(0),
-            )
-            .withColumn("session_id", F.sum("new_session").over(w_run))
-            .drop("new_session")
-        )
-
-    ev = segment_by_span(events, segments)
-    w_in = Window.partitionBy("user_id", "seg").orderBy("ts", "event_id")
-    loc = ev.withColumn(
-        "new_local",
-        F.when(epoch - F.lag(epoch).over(w_in) > SESSION_GAP_S, 1).otherwise(0),
-    ).withColumn(
-        "local_sid",
-        F.sum("new_local").over(
-            w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    summ = loc.groupBy("user_id", "seg").agg(
-        F.min(epoch).alias("first_ep"),
-        F.max(epoch).alias("last_ep"),
-        F.sum("new_local").alias("n_starts"),
-    )
-    w_seg = Window.partitionBy("user_id").orderBy("seg")
-    offsets = (
-        summ.withColumn("prev_last", F.lag("last_ep").over(w_seg))
-        .withColumn(
-            "seam_start",
-            F.when(F.col("first_ep") - F.col("prev_last") > SESSION_GAP_S, 1).otherwise(0),
-        )
-        .withColumn(
-            "cum",
-            F.sum(F.col("seam_start") + F.col("n_starts")).over(
-                w_seg.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .select("user_id", "seg", (F.col("cum") - F.col("n_starts")).alias("offset"))
-    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
-        loc.join(offsets, ["user_id", "seg"])
-        .withColumn("session_id", F.col("offset") + F.col("local_sid"))
-        .drop("seg", "new_local", "local_sid", "offset")
+        events.withColumn(
+            "new_session",
+            F.when(epoch - F.lag(epoch).over(w) > SESSION_GAP_S, 1).otherwise(0),
+        )
+        .withColumn("session_id", F.sum("new_session").over(w_run))
+        .drop("new_session")
     )
 
 
@@ -503,9 +439,9 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE: one shuffle on user_id serves the lag window, the running
     sum, AND the final agg (same partitioning throughout). user_id is
     high-cardinality → uniform; a key owning a data-sized row share
-    serializes the per-user sort — `SPARK_GRAFT_HOTKEY_SEGMENTS=K`
-    enables the equality-proven segment-and-carry island merge (see
-    sessions_frame; docs/SCALE.md round 9)."""
+    serializes the per-user sort into one task. The segment-and-carry
+    island merge that split it was slower on every measured workload,
+    hot key included, and was removed (docs/SCALE.md rounds 9-10)."""
     ev = load_table(spark, sf_dir, "events")
     return sessions_frame(ev).groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
